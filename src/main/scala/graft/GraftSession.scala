@@ -44,7 +44,7 @@ object GraftSession {
     * /dev/shm could not absorb a multi-GB shuffle falls back to disk
     * (slower, but it finishes) instead of dying on ENOSPC mid-stage.
     * `SPARK_GRAFT_LOCAL_DIR` overrides both branches. */
-  private[graft] def localDir: String = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
+  private def localDir: String = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
     val shm = new java.io.File("/dev/shm")
     // 24 GiB ≈ the largest shuffle footprint any gated query reaches
     // at bench scale, with headroom for concurrent sessions

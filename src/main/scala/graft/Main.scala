@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry mirroring the reference's `etl.py` dispatcher
   * (reference etl.py + utils/config.get_arg_parser: --task / --step /
   * --source / --dest args routed to a task main).
@@ -30,11 +28,7 @@ object Main {
 
     task match {
       case "daily" =>
-        val o = pipelines.DailyPipeline.run(spark, dir)
-        emit("occurrence", o.occurrence); emit("retention", o.retention)
-        emit("active_users", o.activeUsers); emit("sessions", o.sessions)
-        emit("user_rfe", o.userRfe); emit("feature_roi", o.featureRoi)
-        emit("user_channels", o.userChannels); emit("revenue", o.revenue)
+        pipelines.DailyPipeline.run(spark, dir).named.foreach { case (n, df) => emit(n, df) }
       case "backfill" =>
         val start = java.time.LocalDate.parse(opts.getOrElse("--start",
           sys.error("backfill needs --start YYYY-MM-DD")))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,15 +10,7 @@ object Verify {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", GraftSession.localDir)
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -32,7 +23,7 @@ object Verify {
       }
       // free localCheckpoint/persist blocks the finished query left
       // behind — over the full surface they accrue into storage
-      // eviction churn (see Bench.cleanup)
+      // eviction churn
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       spark.sharedState.cacheManager.clearCache()

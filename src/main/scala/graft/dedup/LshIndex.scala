@@ -422,11 +422,15 @@ object LshIndex {
         def call(): Long =
           Snapshots.commitAppend(sh, shinglesRoot(root), Seq("dmod"), Some(batchId))
       })
-      def got(f: java.util.concurrent.Future[Long]): Unit =
-        try { f.get(); () }
+      // wait for BOTH before rethrowing: shutdown() does not stop a
+      // running task, so throwing on the first failure would leave the
+      // other append committing after absorbBatch has already failed
+      val failures = Seq(fb, fs).flatMap { f =>
+        try { f.get(); None }
         catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      got(fb); got(fs)
+          Some(e.getCause) }
+      }
+      failures.headOption.foreach(throw _)
     } finally pool.shutdown()
     out
   }

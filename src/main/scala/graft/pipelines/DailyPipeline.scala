@@ -30,7 +30,15 @@ object DailyPipeline {
       userRfe: DataFrame,
       featureRoi: DataFrame,
       userChannels: DataFrame,
-      revenue: DataFrame)
+      revenue: DataFrame) {
+    /** Every output under its table name, in field order: the one list
+      * an orchestrator iterates, so no output can be left out. */
+    def named: Seq[(String, DataFrame)] = Seq(
+      "occurrence" -> occurrence, "retention" -> retention,
+      "active_users" -> activeUsers, "feature_active_users" -> featureActiveUsers,
+      "sessions" -> sessions, "user_rfe" -> userRfe, "feature_roi" -> featureRoi,
+      "user_channels" -> userChannels, "revenue" -> revenue)
+  }
 
   def run(spark: SparkSession, dir: String, asOf: String = CohortQueries.AsOf): Outputs = {
     val events = Tables.events(spark, dir)

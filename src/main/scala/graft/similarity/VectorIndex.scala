@@ -230,9 +230,9 @@ object VectorIndex {
     * fixed k for a fixed corpus; the operational recipe for a GROWING
     * corpus is [[retrainSwap]] at corpus-proportional seedK as part
     * of the nightly/weekly retrain.) This is a MEASURED property, not
-    * a comment: ScaleProbe's `semdedup_scaled` probe retrains at
-    * seedK ∝ N per scale and shows the probe cost staying ~flat at
-    * 16x corpus, where the violated fixed-k form measures 6.5x;
+    * a comment: retrained at seedK ∝ N per scale, the probe cost
+    * measured ~flat at 16x corpus, where the violated fixed-k form
+    * measured 6.5x;
     * VectorIndexSpec pins occupancy flatness under k ∝ N replication,
     * and `q_semdedup_scaled` oracle-gates the scaled-k probe
     * end-to-end (retrainSwap at 4x corpus → k 8 → 32). */

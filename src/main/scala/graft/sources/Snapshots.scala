@@ -920,8 +920,10 @@ object Snapshots {
     * schema validation (guide §5: the driver should do almost no data
     * work). The cid key makes rollback-then-recommit reuse of a
     * version NUMBER miss and recompute, the same ABA defense as the
-    * validation cache above. */
-  private val memberSchemaCache = new java.util.concurrent.ConcurrentHashMap[
+    * validation cache above. [[vacuum]] evicts the entries of the
+    * versions it drops, so the map tracks retained versions, not
+    * every version ever scanned. */
+  private[graft] val memberSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, String), org.apache.spark.sql.types.StructType]()
 
   private def memberSchema(spark: SparkSession, root: String,
@@ -1306,6 +1308,8 @@ object Snapshots {
       Files.deleteIfExists(statsPath(root, v))
       deleteRecursively(Paths.get(dataDir(root, v)))
     }
+    val dropped = drop.toSet
+    memberSchemaCache.keySet.removeIf(k => k._1 == root && dropped(k._2))
     drop
   }
 }

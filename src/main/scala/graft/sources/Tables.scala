@@ -14,9 +14,9 @@ object Tables {
     * or results: every query still scans the parquet itself at each
     * evaluation. Without it each `spark.read.parquet` re-infers the
     * schema (file listing + footer read + conversion), a measured
-    * ~92 ms of driver-side fixed cost PER TABLE REFERENCE (ProbeFloor;
-    * guide §5 "the driver should do almost no data work", §6 listing
-    * costs) — the single largest component of the ~170-query
+    * ~92 ms of driver-side fixed cost PER TABLE REFERENCE (guide §5
+    * "the driver should do almost no data work", §6 listing costs) —
+    * the single largest component of the ~170-query
     * sub-second floor. Source tables are immutable for a session's
     * lifetime (the generator writes them once); a deployment rotating
     * files in place under one path would key this cache by snapshot

@@ -66,6 +66,12 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("daily pipeline composes all stage outputs") {
     val out = graft.pipelines.DailyPipeline.run(spark, sf)
+    // the named list is what `Main --task daily` writes: all 9 tables,
+    // each field exactly once
+    assert(out.named.map(_._1) == Seq("occurrence", "retention", "active_users",
+      "feature_active_users", "sessions", "user_rfe", "feature_roi",
+      "user_channels", "revenue"))
+    assert(out.named.map(_._2) == out.productIterator.toSeq)
     assert(out.occurrence.count() > 0)
     assert(out.retention.count() > 0)
     assert(out.featureRoi.count() > 0)

@@ -1,13 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.CountDownLatch
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.dedup.LshIndex
 import graft.sources.{CommitIO, PosixCommitIO, Snapshots}
 
 /** The [[graft.sources.CommitIO]] seam under fault injection: what
@@ -469,5 +470,39 @@ class CommitIOSpec extends AnyFunSuite {
     assert(!Snapshots.isCompacted(root, 0L))
     val fresh = Snapshots.commit(Seq(9L).toDF("id"), root)
     assert(!Snapshots.isCompacted(root, fresh))
+  }
+
+  test("absorbBatch: a failed bands commit leaves no shingles append running after the throw") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("commitio-lsh").toString
+    val docs = (1 to 40).map(i => (i.toLong,
+      (0 until 30).map(j => s"w${(i * 7 + j) % 97}").mkString(" ")))
+      .toDF("doc_id", "text")
+    LshIndex.build(docs, root)
+    val shRoot = LshIndex.shinglesRoot(root)
+    val shinglesMoving = new CountDownLatch(1)
+    // the bands move fails only once the shingles move is under way,
+    // and the shingles move is slowed so it outlives that failure
+    val io = new DelegatingIO {
+      override def moveStage(stage: Path, dst: Path): Unit =
+        if (dst.startsWith(Paths.get(LshIndex.bandsRoot(root)))) {
+          shinglesMoving.await(60, TimeUnit.SECONDS)
+          throw new java.io.IOException("injected: bands move failed")
+        } else {
+          shinglesMoving.countDown()
+          Thread.sleep(1000)
+          super.moveStage(stage, dst)
+        }
+    }
+    val batch = docs.filter(col("doc_id") <= 5)
+      .select((col("doc_id") + 1000L).as("doc_id"), col("text"))
+    val e = intercept[java.io.IOException](withIO(io) {
+      LshIndex.absorbBatch(spark, root, batch, batchId = 1L)
+    })
+    assert(e.getMessage.contains("injected"))
+    val settled = Snapshots.latestVersion(shRoot)
+    Thread.sleep(2000)
+    assert(Snapshots.latestVersion(shRoot) == settled,
+      "the shingles append committed after absorbBatch had thrown")
   }
 }

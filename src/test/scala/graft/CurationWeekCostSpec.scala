@@ -20,10 +20,7 @@ import graft.sources.Snapshots
   * shared-box noise); a day that trips the bound is re-timed once
   * (fresh day on fresh roots is impossible mid-chain, so the re-time
   * repeats the measurement semantics: noise passes on the second
-  * sample, a structural regression fails both). The same bound is
-  * what Bench publishes as `week_day_outliers` — a flagged artifact
-  * day means either this spec fails too (real) or load hit that
-  * window (the calib series localizes it). */
+  * sample, a structural regression fails both). */
 class CurationWeekCostSpec extends AnyFunSuite {
   import TestSpark._
 

@@ -82,6 +82,18 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(!Files.isDirectory(Paths.get(s"$root/data/v=0")), "vacuumed data must be gone")
   }
 
+  test("vacuum evicts the member-schema cache entries of the versions it drops") {
+    import spark.implicits._
+    val root = tmpRoot()
+    (1L to 4L).foreach(i => Snapshots.commit(Seq(i).toDF("id"), root)) // v0..v3
+    (0L to 3L).foreach(v => Snapshots.readVersion(spark, root, v))      // cache all 4
+    def cached = Snapshots.memberSchemaCache.keySet.asScala
+      .collect { case (r, v, _) if r == root => v }.toSet
+    assert(cached == Set(0L, 1L, 2L, 3L))
+    assert(Snapshots.vacuum(root, keep = 1) == Seq(0L, 1L))
+    assert(cached == Set(2L, 3L))
+  }
+
   test("commitBatch: replaying a micro-batch id is a no-op (exactly-once), new ids advance") {
     import spark.implicits._
     val root = tmpRoot()

@@ -398,8 +398,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // the scaling recipe semProbeBatch's cost model rests on: probe
     // cost ∝ batch × per-bucket occupancy, so occupancy must NOT grow
     // with the corpus when k grows ∝ N (the retrainSwap pairing;
-    // ScaleProbe's semdedup_scaled row measures the time curve, this
-    // pins the structural invariant behind it)
+    // this pins the structural invariant behind the flat time curve)
     def rep(n: Int) = (0 until n).map(r =>
       vecs.select((col("vec_id") + r * 10000000L).as("vec_id"), col("v")))
       .reduce(_ unionByName _)
