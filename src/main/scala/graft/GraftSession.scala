@@ -27,6 +27,16 @@ object GraftSession {
       // reader rejects; read as long and convert in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // generated-code cache (Janino classes keyed by their source
+      // text): a warm daily DAG cycle generates 182-187 classes
+      // (perfbench daily_dag, local[2]) and Spark keeps 100 by default,
+      // so the LRU, swept in the same order every cycle, never hit and
+      // each cycle recompiled them all. 2000 holds a DAG cycle and a
+      // curation day with room to spare; a warm cycle now compiles
+      // 0-14. The cache is one per JVM, sized from the active session's
+      // conf when code is first generated — hence a static conf set here,
+      // where every session of the program is built.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       // shuffle/spill files on tmpfs when available: the default /tmp
       // sits on a virtual disk here, where shuffle-file churn burns
       // multiple CORES of kernel time with run-to-run writeback

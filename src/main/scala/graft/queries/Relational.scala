@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.operators.Dedup
+import graft.operators.{Cohort, Dedup}
 import graft.functions.Mappings
 
 /** Relational / ETL core operators (SURVEY §2 #1-23, first batch).
@@ -55,14 +55,14 @@ object Relational {
         count(lit(1)).as("count_order"))
 
   /** #4 conditional COUNT(DISTINCT CASE ...) — the retention-matrix
-    * counting idiom (reference sql/mango_cohort_retained_users.sql). */
+    * counting idiom (reference sql/mango_cohort_retained_users.sql),
+    * planned as per-user flags then counts, not an `Expand`. */
   def countDistinctConditional(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(
-        countDistinct(col("user_id")).as("users"),
-        countDistinct(when(col("event_type") === "purchase", col("user_id"))).as("purchasers"),
-        countDistinct(when(col("value") > 100, col("user_id"))).as("big_spenders"))
+    Cohort.distinctUserCounts(
+      Tables.events(s, dir).withColumn("day", to_date(col("ts"))), Seq("day"), "user_id")(
+      "users" -> lit(true),
+      "purchasers" -> (col("event_type") === "purchase"),
+      "big_spenders" -> (col("value") > 100))
 
   /** #5 star join with broadcast dims
     * (reference sql/mango_revenue_google.sql vol⋈rps). */

@@ -10,24 +10,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and predicate pushdown into the scan.
   */
 object Tables {
-  /** Resolved read SCHEMA per table path — metadata only, never data
-    * or results: every query still scans the parquet itself at each
-    * evaluation. Without it each `spark.read.parquet` re-infers the
-    * schema (file listing + footer read + conversion), a measured
-    * ~92 ms of driver-side fixed cost PER TABLE REFERENCE (guide §5
-    * "the driver should do almost no data work", §6 listing costs) —
-    * the single largest component of the ~170-query
-    * sub-second floor. Source tables are immutable for a session's
-    * lifetime (the generator writes them once); a deployment rotating
-    * files in place under one path would key this cache by snapshot
-    * like [[Snapshots]] does. */
+  /** Resolved read SCHEMA per table path, with the path's modification
+    * time when it was read — metadata only, never data or results:
+    * every query still scans the parquet itself at each evaluation.
+    * Without it each `spark.read.parquet` re-infers the schema (file
+    * listing + footer read + conversion), a measured ~92 ms of
+    * driver-side fixed cost PER TABLE REFERENCE (guide §5 "the driver
+    * should do almost no data work", §6 listing costs) — the single
+    * largest component of the ~170-query sub-second floor. A source
+    * rewritten in place under the same path (an overwrite recreates
+    * the directory) gets a new modification time, so the next
+    * reference re-infers its schema; the check costs one stat per
+    * table reference. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, (Long, org.apache.spark.sql.types.StructType)]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val mtime = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(hp).getModificationTime
+    val schema = schemaCache.compute(path, (_, hit) =>
+      if (hit != null && hit._1 == mtime) hit else (mtime, spark.read.parquet(path).schema))._2
     spark.read.schema(schema).parquet(path)
   }
 

@@ -338,6 +338,20 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("distinct-user counts plan per-user flags: no Expand, no exchange past the occurrence's") {
+    for (q <- Seq("q_cohort_retained", "q_active_user_count", "q_count_distinct")) {
+      val p = plan(q)
+      assert(!p.contains("Expand"), s"$q expands rows again:\n$p")
+    }
+    // the flags reuse the occurrence's (dims, user) partitioning; only
+    // the per-key counts shuffle again
+    val occurrence = exchanges(plan("q_user_occurrence"))
+    for (q <- Seq("q_cohort_retained", "q_active_user_count", "q_feature_active_users")) {
+      val p = plan(q)
+      assert(exchanges(p) == occurrence + 1, s"$q grew a shuffle:\n$p")
+    }
+  }
+
   test("no query scans more than 8 columns of any table") {
     for ((name, fn) <- SparkEntry.queries) {
       val p = fn(spark, sf).queryExecution.executedPlan.toString

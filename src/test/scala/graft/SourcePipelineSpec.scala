@@ -29,6 +29,18 @@ class SourcePipelineSpec extends AnyFunSuite {
           .mkString("\n"))
       }
 
+  test("a source table rewritten in place is read with its new schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-tables").toString
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/t.parquet")
+    assert(Tables(spark, dir, "t").columns.toSeq == Seq("id", "name"))
+    Seq((2L, "b", 3.5)).toDF("id", "name", "score")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val reread = Tables(spark, dir, "t")
+    assert(reread.columns.toSeq == Seq("id", "name", "score"))
+    assert(reread.collect().map(_.getDouble(2)).toSeq == Seq(3.5))
+  }
+
   test("api source pages through iterators and caches raw files") {
     val raw = Files.createTempDirectory("graft-api").toString
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
