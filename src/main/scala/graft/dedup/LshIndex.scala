@@ -57,11 +57,9 @@ object LshIndex {
     * the probe's build side (rows ≈ |batch| × bands/doc; ~40 B/row →
     * the default bounds the relation near 40 MB, well under the 8 GB
     * broadcast cap). A daily batch sits orders of magnitude below it;
-    * a backfill-sized batch falls back to the shuffle_hash plan.
-    * `-Dgraft.lsh.broadcastMaxBandRows` overrides. */
-  def BroadcastMaxBandRows: Long =
-    sys.props.get("graft.lsh.broadcastMaxBandRows").map(_.toLong)
-      .getOrElse(1000000L)
+    * a backfill-sized batch falls back to the shuffle_hash plan
+    * (specs force that fallback through this seam). */
+  @volatile private[graft] var broadcastMaxBandRows: Long = 1000000L
 
   def bandsRoot(root: String): String = s"$root/bands"
   def shinglesRoot(root: String): String = s"$root/shingles"
@@ -315,7 +313,7 @@ object LshIndex {
     // past the guard (a backfill-sized "batch") the shuffle_hash build
     // keeps the old bounded-memory plan
     val probeSide =
-      if (bandRows <= BroadcastMaxBandRows) broadcast(bb)
+      if (bandRows <= broadcastMaxBandRows) broadcast(bb)
       else bb.hint("shuffle_hash")
     val pairs = indexSide.as("i")
       .join(probeSide.as("n"),

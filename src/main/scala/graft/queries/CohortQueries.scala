@@ -1,10 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-import graft.operators.{Cohort, Sessionize}
+import graft.pipelines.DailyPipeline
 
 /** Cohort / retention / engagement analytics (SURVEY §2 #24-28).
   * The reference's domain core, re-keyed onto the `events` table
@@ -15,40 +13,33 @@ object CohortQueries {
     * date" the reference passes as {start_date}. */
   val AsOf = "2024-01-30"
 
+  // The five queries ARE DailyPipeline outputs: one definition, so
+  // the oracle-gated query and the DAG table cannot drift apart.
+
   /** #24 per-user occurrence derivation
     * (reference sql/mango_user_occurrence.sql). */
   def userOccurrence(s: SparkSession, dir: String): DataFrame =
-    Cohort.occurrence(Tables.events(s, dir), "user_id", "ts")
-      .select(col("user_id"), col("occur_date"), col("cohort_date"),
-        col("occur_day"), col("occur_week"), col("occur_month"))
+    DailyPipeline.run(s, dir).occurrence
 
   /** #25 retention matrix by cohort date
     * (reference sql/mango_cohort_retained_users.sql). */
   def cohortRetained(s: SparkSession, dir: String): DataFrame =
-    Cohort.retentionMatrix(
-      Cohort.occurrence(Tables.events(s, dir), "user_id", "ts"), Nil)
+    DailyPipeline.run(s, dir).retention
 
   /** #26 DAU/WAU/MAU + new-user variants as of [[AsOf]]
     * (reference sql/mango_active_user_count.sql). */
-  def activeUserCount(s: SparkSession, dir: String): DataFrame = {
-    val occ = Cohort.occurrence(Tables.events(s, dir), "user_id", "ts")
-      .withColumn("scope", lit("all"))
-    Cohort.activeUserCount(occ, AsOf, Seq("scope"))
-  }
+  def activeUserCount(s: SparkSession, dir: String): DataFrame =
+    DailyPipeline.run(s, dir).activeUsers
 
   /** #27 per-feature DAU/WAU/MAU (event_type ≙ feature)
     * (reference sql/mango_feature_active_user_count.sql). */
-  def featureActiveUsers(s: SparkSession, dir: String): DataFrame = {
-    val occ = Cohort.occurrence(Tables.events(s, dir), "user_id", "ts", Seq("event_type"))
-    Cohort.activeUserCount(occ, AsOf, Seq("event_type"))
-  }
+  def featureActiveUsers(s: SparkSession, dir: String): DataFrame =
+    DailyPipeline.run(s, dir).featureActiveUsers
 
   /** #28 sessionization with 30-min idle cap
     * (reference sql/mango_user_rfe_daily_session.sql). */
   def sessionize(s: SparkSession, dir: String): DataFrame =
-    Sessionize.dailySessionTime(
-      Tables.events(s, dir), Seq("user_id"), "ts", Seq(col("ts"), col("event_id")))
-      .select(col("user_id"), col("day"), col("session_time_us"), col("n_events"))
+    DailyPipeline.run(s, dir).sessions
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_user_occurrence"      -> userOccurrence _,

@@ -22,11 +22,9 @@ object GraphB {
     * [[edgeJaccardEstimate]]'s exact re-score will broadcast as its
     * wedge build side (~24 B/row → the default bounds the built
     * relation near 100 MB); past it the re-score falls back to a
-    * shuffle_hash build — same rows, bounded memory.
-    * `-Dgraft.ejacc.broadcastMaxWedges` overrides. */
-  private[graft] def EjaccBroadcastMaxWedges: Long =
-    sys.props.get("graft.ejacc.broadcastMaxWedges").map(_.toLong)
-      .getOrElse(4000000L)
+    * shuffle_hash build — same rows, bounded memory (specs force that
+    * fallback through this seam). */
+  @volatile private[graft] var ejaccBroadcastMaxWedges: Long = 4000000L
 
   /** #136 LABEL PROPAGATION communities — 2 synchronous rounds of the
     * classic LPA (Raghavan et al. 2007): every node starts in its own
@@ -297,7 +295,7 @@ object GraphB {
     val wedgeBound = top.agg(coalesce(sum(col("dega")), lit(0L)))
       .head().getLong(0)
     val wedgesHinted =
-      if (wedgeBound <= EjaccBroadcastMaxWedges) broadcast(wedges)
+      if (wedgeBound <= ejaccBroadcastMaxWedges) broadcast(wedges)
       else wedges.hint("shuffle_hash")
     val cnX = wedgesHinted.join(
         edges.select(col("src").as("s2"), col("dst").as("d2")),

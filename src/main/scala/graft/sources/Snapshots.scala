@@ -13,7 +13,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Layout under a table root:
   * {{{
   *   <root>/data/v=N/part-*.parquet     immutable snapshot data
-  *   <root>/manifests/vN.json           {"version":N,"rows":...,"parent":N-1}
+  *   <root>/manifests/vN.json           one [[Snapshots.Manifest]] record:
+  *                                      {"version":N,"rows":R,"parent":N-1,
+  *                                       "ts":..,"cid":"..","batchId":..,
+  *                                       "delta":true,"tombstoneKey":"..",
+  *                                       "mergeKey":"..","keyed":true,
+  *                                       "compacted":true,"maxBatchId":..}
+  *                                      (absent options and false flags omitted)
+  *   <root>/manifests/stats-vN.json     optional per-file stats ([[FileStats]])
   *   <root>/_latest                     atomic pointer file: "N"
   * }}}
   *
@@ -87,14 +94,11 @@ object Snapshots {
       Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
 
   /** How long a stage tree may sit mtime-quiet before [[vacuum]]
-    * treats it as a crashed writer's orphan
-    * (`-Dgraft.snapshots.stageAbandonCutoffSec`, default 1 hour).
-    * Live writers HEARTBEAT their stage (below), so the cutoff only
-    * paces orphan reclamation — it can never sweep a live commit,
-    * however long the writer stalls. */
-  private[graft] def stageAbandonCutoffMs: Long =
-    sys.props.get("graft.snapshots.stageAbandonCutoffSec")
-      .map(_.toLong).getOrElse(3600L) * 1000L
+    * treats it as a crashed writer's orphan (1 hour; specs shorten it
+    * through this seam). Live writers HEARTBEAT their stage (below),
+    * so the cutoff only paces orphan reclamation — it can never sweep
+    * a live commit, however long the writer stalls. */
+  @volatile private[graft] var stageAbandonCutoffMs: Long = 3600L * 1000L
 
   private lazy val heartbeats =
     java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
@@ -190,15 +194,82 @@ object Snapshots {
     * NOT count; opening a `vN.json` does. */
   private[graft] val manifestReads = new java.util.concurrent.atomic.AtomicLong
 
-  /** The manifest's JSON text, if the version was ever committed —
-    * every metadata reader below goes through here so the read count
-    * is an honest total. */
-  private def manifestText(root: String, v: Long): Option[String] = {
-    val m = manifest(root, v)
-    if (!Files.exists(m)) None
+  /** One commit's manifest record (`manifests/vN.json`), fields in
+    * on-disk order:
+    *  - `version`, `rows` (this version's OWN rows), `parent`;
+    *  - `ts`: wall-clock commit millis — powers [[readAsOf]];
+    *  - `cid`: a per-commit UUID, THE identity of a commit (version
+    *    numbers are reused by rollback-then-recommit, wall-clock
+    *    millis collide) — the ABA guard for [[compact]]'s chain pin and
+    *    the schema caches;
+    *  - `batchId`: the commit's idempotence key; `keyed` marks it an
+    *    UNORDERED content fingerprint ([[commitKeyed]]) rather than a
+    *    monotone batch id, so watermark readers skip it;
+    *  - `delta`: an append-chain member ([[commitAppend]]) — readers
+    *    resolve its parent chain;
+    *  - `tombstoneKey` / `mergeKey`: the key column of a TOMBSTONE
+    *    ([[commitDelete]]) / MERGE ([[commitMerge]]) version — both
+    *    ride the delta-chain machinery but flip the reader's fold from
+    *    union to anti-join (merge: anti-join its keys, then union);
+    *  - `compacted`: an INVISIBLE full rewrite ([[compact]]) — a
+    *    change-feed follower skips it, where a fresh [[commit]] (a real
+    *    content replace) is a feed error;
+    *  - `maxBatchId`: the running max of monotone batch ids, carried
+    *    through every commit — the replay watermark ([[maxBatchIdOf]]).
+    * Absent options and false flags are omitted on disk. Manifests
+    * from before `ts`, `cid`, `keyed` or `maxBatchId` existed parse
+    * with them absent; [[readAsOf]] treats a missing `ts` as
+    * infinitely old. */
+  final case class Manifest(
+      version: Long = -1L, rows: Long = 0L, parent: Long = -1L,
+      ts: Option[Long] = None, cid: Option[String] = None,
+      batchId: Option[Long] = None, delta: Boolean = false,
+      tombstoneKey: Option[String] = None, mergeKey: Option[String] = None,
+      keyed: Boolean = false, compacted: Boolean = false,
+      maxBatchId: Option[Long] = None) {
+
+    /** Comparable identity for ABA guards: the commit id, else the
+      * legacy timestamp (pre-cid manifests) — two reads agree iff they
+      * saw the SAME commit of this version. */
+    private[Snapshots] def identity: String =
+      cid.orElse(ts.map(t => s"ts:$t")).getOrElse("absent")
+
+    private[Snapshots] def toJson: String = {
+      val n = json.createObjectNode()
+      n.put("version", version)
+      n.put("rows", rows)
+      n.put("parent", parent)
+      ts.foreach(n.put("ts", _))
+      cid.foreach(n.put("cid", _))
+      batchId.foreach(n.put("batchId", _))
+      if (delta) n.put("delta", true)
+      tombstoneKey.foreach(n.put("tombstoneKey", _))
+      mergeKey.foreach(n.put("mergeKey", _))
+      if (keyed) n.put("keyed", true)
+      if (compacted) n.put("compacted", true)
+      maxBatchId.foreach(n.put("maxBatchId", _))
+      json.writeValueAsString(n)
+    }
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The parsed manifest of `v`, if the version was ever committed —
+    * every metadata reader goes through here, so [[manifestReads]] is
+    * an honest total. */
+  def manifestOf(root: String, v: Long): Option[Manifest] = {
+    val p = manifest(root, v)
+    if (!Files.exists(p)) None
     else {
       manifestReads.incrementAndGet()
-      Some(new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
+      val n = json.readTree(Files.readAllBytes(p))
+      def long(f: String) = Option(n.get(f)).map(_.asLong)
+      def str(f: String) = Option(n.get(f)).map(_.asText)
+      def flag(f: String) = Option(n.get(f)).exists(_.asBoolean)
+      Some(Manifest(n.path("version").asLong(v), n.path("rows").asLong,
+        n.path("parent").asLong(v - 1), long("ts"), str("cid"), long("batchId"),
+        flag("delta"), str("tombstoneKey"), str("mergeKey"), flag("keyed"),
+        flag("compacted"), long("maxBatchId")))
     }
   }
 
@@ -233,7 +304,7 @@ object Snapshots {
     * (Z-order / range sort before the commit) or the min/max spans
     * cover everything and nothing prunes. */
   def commit(df: DataFrame, root: String, statsCols: Seq[String] = Seq.empty): Long =
-    commitInternal(df, root, None, statsCols = statsCols).version
+    commitInternal(df, root, Manifest(), statsCols = statsCols).version
 
   /** [[commit]] with hive-style partition directories on
     * `partitionCols` inside the snapshot's data dir — a reader
@@ -245,7 +316,7 @@ object Snapshots {
     * key, stats pruning for the fine one. */
   def commitPartitioned(df: DataFrame, root: String, partitionCols: Seq[String],
       statsCols: Seq[String] = Seq.empty): Long =
-    commitInternal(df, root, None, partitionCols, statsCols = statsCols).version
+    commitInternal(df, root, Manifest(), partitionCols, statsCols = statsCols).version
 
   /** IDEMPOTENT commit keyed by an external batch id (a Structured
     * Streaming micro-batch id): replaying a batch id ≤ the last
@@ -255,17 +326,8 @@ object Snapshots {
     * version history as a bonus (each micro-batch is a time-travel
     * point). Returns the committed (or already-current) version. */
   def commitBatch(df: DataFrame, root: String, batchId: Long,
-      statsCols: Seq[String] = Seq.empty): Long = {
-    val latest = latestVersion(root)
-    if (latest.exists(v => maxBatchIdOf(root, v).exists(_ >= batchId))) latest.get
-    // the pre-check above is the cheap fast path; the guard re-runs it
-    // under the commit lock so two racing replays of one batch id can
-    // never BOTH pass (the loser discards its staged data and returns
-    // the winner's version)
-    else commitInternal(df, root, Some(batchId), statsCols = statsCols,
-      guard = Some(() => !latestVersion(root)
-        .exists(v => maxBatchIdOf(root, v).exists(_ >= batchId)))).version
-  }
+      statsCols: Seq[String] = Seq.empty): Long =
+    commitGuarded(df, root, Manifest(batchId = Some(batchId)), statsCols = statsCols)
 
   /** APPEND (delta) commit: the new version's data dir holds ONLY
     * `delta`'s rows; its manifest records `delta:true` and readers
@@ -283,51 +345,40 @@ object Snapshots {
       statsCols: Seq[String] = Seq.empty): Long = {
     require(latestVersion(root).nonEmpty,
       s"commitAppend needs an existing full snapshot under $root")
-    batchId match {
-      case Some(b) =>
-        val latest = latestVersion(root)
-        // the replay guard reads the HISTORY-WIDE max monotone batch id
-        // (carried forward through every manifest), not just the latest
-        // version's own batchId: an interleaved unkeyed commit would
-        // otherwise blank the guard and let a re-delivered batch
-        // double-append its rows. The fast-path check runs BEFORE
-        // schema validation: a straggling duplicate of a pre-evolution
-        // batch must NO-OP like any other replay, not crash the
-        // pipeline on a delivery that will never be written (and a
-        // no-op must not pay the chain-schema read). The guard repeats
-        // the check under the commit lock so two concurrent deliveries
-        // of one batch id land EXACTLY once (the loser discards its
-        // stage).
-        if (latest.exists(v => maxBatchIdOf(root, v).exists(_ >= b))) latest.get
-        else {
-          validateAppendSchema(delta, root, evolveSchema)
-          val c = commitInternal(delta, root, batchId, partitionCols,
-            delta = true, statsCols = statsCols,
-            guard = Some(() => {
-              val fresh = !latestVersion(root)
-                .exists(v => maxBatchIdOf(root, v).exists(_ >= b))
-              // re-run the schema contract UNDER the lock: the
-              // pre-stage check above fails fast, but a racing
-              // evolution commit landing between it and the claim
-              // would otherwise let a mismatched column set commit
-              // without evolveSchema — the write-time contract must
-              // hold under contention, not just solo (a thrown guard
-              // discards the stage and propagates loudly)
-              if (fresh) validateAppendSchema(delta, root, evolveSchema)
-              fresh
-            }))
-          if (c.committed) carrySchemaCache(root, delta, c.version)
-          c.version
-        }
-      case None =>
-        validateAppendSchema(delta, root, evolveSchema)
-        val c = commitInternal(delta, root, None, partitionCols, delta = true,
-          statsCols = statsCols,
-          guard = Some(() => {
-            validateAppendSchema(delta, root, evolveSchema); true
-          }))
-        if (c.committed) carrySchemaCache(root, delta, c.version)
-        c.version
+    commitGuarded(delta, root, Manifest(batchId = batchId, delta = true),
+      partitionCols, Some(evolveSchema), statsCols)
+  }
+
+  /** The one REPLAY-GUARDED commit path behind [[commitBatch]],
+    * [[commitAppend]], [[commitDelete]] and [[commitMerge]]. With a
+    * `batchId` in the template, a replay — an id at or below the
+    * HISTORY-WIDE max monotone batch id ([[maxBatchIdOf]], carried
+    * forward through every manifest, so an interleaved unkeyed commit
+    * cannot blank it) — is a NO-OP returning the current latest; no
+    * `batchId` always commits. The fast-path check runs BEFORE schema
+    * validation: a straggling duplicate of a pre-evolution batch must
+    * no-op like any other replay, not crash the pipeline on a delivery
+    * that will never be written (and a no-op must not pay the
+    * chain-schema read). `evolveSchema` (None: no schema contract)
+    * runs [[validateAppendSchema]]. The guard repeats both checks
+    * UNDER the commit lock: two concurrent deliveries of one batch id
+    * land EXACTLY once (the loser discards its stage), and a racing
+    * evolution commit landing between the pre-check and the claim
+    * cannot let a mismatched column set commit without evolveSchema
+    * (a thrown guard discards the stage and propagates loudly). */
+  private def commitGuarded(df: DataFrame, root: String, template: Manifest,
+      partitionCols: Seq[String] = Seq.empty, evolveSchema: Option[Boolean] = None,
+      statsCols: Seq[String] = Seq.empty): Long = {
+    def replayOf(latest: Option[Long]): Option[Long] = latest.filter(v =>
+      template.batchId.exists(b => maxBatchIdOf(root, v).exists(_ >= b)))
+    def validate(): Unit = evolveSchema.foreach(validateAppendSchema(df, root, _))
+    replayOf(latestVersion(root)).getOrElse {
+      validate()
+      val c = commitInternal(df, root, template, partitionCols,
+        guard = () => replayOf(latestVersion(root)).isEmpty && { validate(); true },
+        statsCols = statsCols)
+      if (c.committed && evolveSchema.nonEmpty) carrySchemaCache(root, df, c.version)
+      c.version
     }
   }
 
@@ -348,7 +399,7 @@ object Snapshots {
     schemaCache.get(root) match {
       case (pv, _, s) if pv == v - 1 &&
           delta.columns.toSet == s.fieldNames.toSet =>
-        commitIdOf(root, v).foreach(cid => schemaCache.put(root, (v, cid, s)))
+        manifestOf(root, v).flatMap(_.cid).foreach(cid => schemaCache.put(root, (v, cid, s)))
       case _ => ()
     }
 
@@ -413,13 +464,7 @@ object Snapshots {
 
   /** Whether a version is a delta (append) commit. */
   def isDelta(root: String, v: Long): Boolean =
-    manifestText(root, v).exists(_.contains("\"delta\":true"))
-
-  /** The key column of a TOMBSTONE (targeted-delete) version, if this
-    * version is one — see [[commitDelete]]. */
-  def tombstoneKeyOf(root: String, v: Long): Option[String] =
-    manifestText(root, v).flatMap(
-      "\"tombstoneKey\":\"([^\"]+)\"".r.findFirstMatchIn(_)).map(_.group(1))
+    manifestOf(root, v).exists(_.delta)
 
   /** TARGETED DELETE (the right-to-be-forgotten path): commit a
     * TOMBSTONE version whose data dir holds only the KEYS to delete —
@@ -444,24 +489,9 @@ object Snapshots {
       batchId: Option[Long] = None): Long = {
     require(latestVersion(root).nonEmpty,
       s"commitDelete needs an existing snapshot under $root")
-    batchId match {
-      case Some(b) =>
-        val latest = latestVersion(root)
-        if (latest.exists(v => maxBatchIdOf(root, v).exists(_ >= b))) latest.get
-        else commitInternal(keys.select(keys(keyCol)), root, batchId,
-          delta = true, tombstoneKey = Some(keyCol),
-          guard = Some(() => !latestVersion(root)
-            .exists(v => maxBatchIdOf(root, v).exists(_ >= b)))).version
-      case None => commitInternal(keys.select(keys(keyCol)), root, None,
-        delta = true, tombstoneKey = Some(keyCol)).version
-    }
+    commitGuarded(keys.select(keys(keyCol)), root,
+      Manifest(batchId = batchId, delta = true, tombstoneKey = Some(keyCol)))
   }
-
-  /** The key column of a MERGE (upsert) version, if this version is
-    * one — see [[commitMerge]]. */
-  def mergeKeyOf(root: String, v: Long): Option[String] =
-    manifestText(root, v).flatMap(
-      "\"mergeKey\":\"([^\"]+)\"".r.findFirstMatchIn(_)).map(_.group(1))
 
   /** ATOMIC MERGE (upsert) commit — the stored-table form of the
     * reference's `do_updates_inserts` (tasks/revenue.py): rows of
@@ -486,36 +516,9 @@ object Snapshots {
       s"commitMerge needs an existing snapshot under $root")
     require(updates.columns.contains(keyCol),
       s"merge key $keyCol missing from the update frame")
-    batchId match {
-      case Some(b) =>
-        val latest = latestVersion(root)
-        // fast-path before validation — the commitAppend contract: a
-        // replayed pre-evolution batch no-ops instead of throwing
-        if (latest.exists(v => maxBatchIdOf(root, v).exists(_ >= b))) latest.get
-        else {
-          validateAppendSchema(updates, root, evolveSchema)
-          val c = commitInternal(updates, root, batchId, partitionCols,
-            delta = true, mergeKey = Some(keyCol),
-            guard = Some(() => {
-              val fresh = !latestVersion(root)
-                .exists(v => maxBatchIdOf(root, v).exists(_ >= b))
-              // same under-lock schema recheck as commitAppend
-              if (fresh) validateAppendSchema(updates, root, evolveSchema)
-              fresh
-            }))
-          if (c.committed) carrySchemaCache(root, updates, c.version)
-          c.version
-        }
-      case None =>
-        validateAppendSchema(updates, root, evolveSchema)
-        val c = commitInternal(updates, root, None, partitionCols,
-          delta = true, mergeKey = Some(keyCol),
-          guard = Some(() => {
-            validateAppendSchema(updates, root, evolveSchema); true
-          }))
-        if (c.committed) carrySchemaCache(root, updates, c.version)
-        c.version
-    }
+    commitGuarded(updates, root,
+      Manifest(batchId = batchId, delta = true, mergeKey = Some(keyCol)),
+      partitionCols, Some(evolveSchema))
   }
 
   /** CHANGE FEED: every row-level change committed AFTER `fromV` up to
@@ -548,14 +551,15 @@ object Snapshots {
     * error as in [[changesBetween]]. */
   def changesOf(spark: SparkSession, root: String, v: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    require(isDelta(root, v),
+    val m = manifestOf(root, v).filter(_.delta)
+    require(m.nonEmpty,
       s"version $v is a full rewrite — the change feed covers delta history only")
-    val df = spark.read.schema(memberSchema(spark, root, v))
+    val df = spark.read.schema(memberSchema(spark, root, m.get))
       .option("basePath", dataDir(root, v))
       .parquet(dataDir(root, v))
     val typ =
-      if (tombstoneKeyOf(root, v).nonEmpty) "delete"
-      else if (mergeKeyOf(root, v).nonEmpty) "upsert"
+      if (m.get.tombstoneKey.nonEmpty) "delete"
+      else if (m.get.mergeKey.nonEmpty) "upsert"
       else "insert"
     df.withColumn("_change_type", lit(typ))
       .withColumn("_commit_version", lit(v))
@@ -564,14 +568,22 @@ object Snapshots {
   /** The version chain a read of `v` resolves: `v` and its ancestors
     * back to (and including) the most recent FULL snapshot —
     * newest-first. O(chain length) metadata reads, no data touched. */
-  def chainVersions(root: String, v: Long): Seq[Long] = {
-    val chain = Seq.newBuilder[Long]
-    var cur = v
-    while (cur >= 0 && isDelta(root, cur)) { chain += cur; cur -= 1 }
-    require(cur >= 0 && Files.exists(manifest(root, cur)),
-      s"delta chain under $root has no full-snapshot base at or below $v")
-    chain += cur
-    chain.result()
+  def chainVersions(root: String, v: Long): Seq[Long] =
+    chain(root, v).map(_.version).reverse
+
+  /** [[chainVersions]]' manifests, OLDEST-first (the fold order) —
+    * each member's manifest parsed once. */
+  private def chain(root: String, v: Long): List[Manifest] = {
+    @annotation.tailrec
+    def walk(cv: Long, acc: List[Manifest]): List[Manifest] =
+      manifestOf(root, cv) match {
+        case Some(m) if m.delta => walk(cv - 1, m :: acc)
+        case Some(base) => base :: acc
+        case None => throw new IllegalArgumentException(
+          if (cv == v) s"version $v was never committed (or vacuumed)"
+          else s"delta chain under $root has no full-snapshot base at or below $v")
+      }
+    walk(v, Nil)
   }
 
   /** Rewrite the current delta chain as one full snapshot (the
@@ -610,27 +622,29 @@ object Snapshots {
       // against the same version-number reuse the same way).
       val pinned = latestVersion(root).getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
-      if (!isDelta(root, pinned)) return pinned
-      val pinnedId = commitIdentity(root, pinned)
+      val pinnedManifest = manifestOf(root, pinned)
+      if (!pinnedManifest.exists(_.delta)) return pinned
+      val pinnedId = pinnedManifest.get.identity
       // carry the chain's max batchId into the compacted manifest:
       // commitAppend's replay check reads the LATEST version's
-      // batchId, so a compact that dropped it would let a re-delivered
-      // old batch append AGAIN on top of data that already contains it.
-      // Source of truth is the CARRIED maxBatchId field (keyed commits
-      // already excluded at write time, and — unlike the legacy chain
-      // scan — no plausibility bound applies, so timestamp-derived
-      // monotone ids like epoch millis survive compaction); the chain
-      // scan inside maxBatchIdOf serves only manifests from before the
-      // field existed
+      // watermark, so a compact that dropped it would let a
+      // re-delivered old batch append AGAIN on top of data that
+      // already contains it. Source of truth is the CARRIED maxBatchId
+      // field (keyed commits already excluded at write time, and —
+      // unlike the chain scan — no plausibility bound applies, so
+      // timestamp-derived monotone ids like epoch millis survive
+      // compaction); the chain scan inside maxBatchIdOf serves only
+      // manifests that carry no field (see there)
       val maxBatch = maxBatchIdOf(root, pinned)
       // compacted = true: marks this full rewrite as an INVISIBLE one
       // (same logical content as the chain it replaces), which is what
       // lets a change-feed follower skip it instead of erroring — a
       // fresh commit() has no such marker and remains a feed error
       val c = commitInternal(readVersion(spark, root, pinned), root,
-        maxBatch, partitionCols, compacted = true, statsCols = statsCols,
-        guard = Some(() => latestVersion(root).contains(pinned) &&
-          commitIdentity(root, pinned) == pinnedId))
+        Manifest(batchId = maxBatch, compacted = true), partitionCols,
+        guard = () => latestVersion(root).contains(pinned) &&
+          commitIdentity(root, pinned) == pinnedId,
+        statsCols = statsCols)
       if (c.committed) return c.version
     }
     latestVersion(root).get // contended past the retry cap: defer
@@ -644,10 +658,11 @@ object Snapshots {
     * stages; else commit a new version and return (it, true). */
   def commitKeyed(df: => DataFrame, root: String, key: Long,
       partitionCols: Seq[String] = Seq.empty): (Long, Boolean) = {
-    def existing = versions(root).find(v => batchIdOf(root, v).contains(key))
+    def existing = versions(root).find(v =>
+      manifestOf(root, v).exists(_.batchId.contains(key)))
     existing match {
       case Some(v) => (v, false)
-      // monotone = false: a content-fingerprint key is an UNORDERED
+      // keyed = true: a content-fingerprint key is an UNORDERED
       // identity, not a monotone batch id — folding it into the carried
       // maxBatchId would let one (arbitrarily large) fingerprint block
       // every later commitBatch/commitAppend on a shared root.
@@ -655,79 +670,58 @@ object Snapshots {
       // runs of one fingerprint commit exactly one version (the loser
       // reports the winner's version with committed = false).
       case None =>
-        val v = commitInternal(df, root, Some(key), partitionCols,
-          monotone = false, guard = Some(() => existing.isEmpty))
+        val v = commitInternal(df, root, Manifest(batchId = Some(key), keyed = true),
+          partitionCols, guard = () => existing.isEmpty)
         if (v.committed) (v.version, true) else (existing.get, false)
     }
   }
 
-  /** The batch id recorded in a version's manifest, if any. */
-  def batchIdOf(root: String, v: Long): Option[Long] =
-    manifestText(root, v).flatMap(
-      "\"batchId\":(-?\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toLong)
-
-  /** Whether a version's batchId is an UNORDERED content-fingerprint
-    * key (written by [[commitKeyed]]) rather than a monotone batch id.
-    * Keyed versions are excluded from every monotone-watermark
-    * computation: a keyed commit that happens to be the FIRST commit
-    * on a root (a released curated artifact) must not poison the
-    * replay guard with a ~random 64-bit fingerprint, which would make
-    * every later commitBatch/commitAppend silently no-op. */
-  def isKeyed(root: String, v: Long): Boolean =
-    manifestText(root, v).exists(_.contains("\"keyed\":true"))
-
-  /** LEGACY-FALLBACK-ONLY plausibility bound — applied solely inside
-    * [[monotoneChainMax]], which itself only runs for manifests from
-    * before the carried `maxBatchId` field existed (see
-    * [[maxBatchIdOf]]): monotone batch ids are typically small counters
-    * (micro-batch ids, day indexes); [[commitKeyed]] fingerprints are
-    * ~uniform 64-bit values, and keyed manifests written BEFORE the
-    * `"keyed":true` marker existed carry no marker, so the fallback
-    * treats an implausibly large |batchId| as keyed — a random 64-bit
-    * fingerprint exceeds 2^40 with probability 1 - 2^-23. A LIVE chain
-    * (every post-field manifest) is never subject to this bound: the
-    * carried field excludes keyed commits at write time, so
-    * timestamp-derived monotone ids (epoch millis ≈ 1.8e12 > 2^40) keep
-    * their replay protection through compaction. */
+  /** Plausibility bound of the chain-scan fallback in [[maxBatchIdOf]]
+    * (applied there only, never to the carried `maxBatchId` field):
+    * monotone batch ids are typically small counters (micro-batch ids,
+    * day indexes); [[commitKeyed]] fingerprints are ~uniform 64-bit
+    * values, and keyed manifests written BEFORE the `"keyed":true`
+    * marker existed carry no marker, so the scan treats an implausibly
+    * large |batchId| as keyed — a random 64-bit fingerprint exceeds
+    * 2^40 with probability 1 - 2^-23. The scan runs on every manifest
+    * that carries no `maxBatchId`: pre-field manifests, but also LIVE
+    * roots that have seen no monotone batch id yet — a keyed-first
+    * root such as every [[graft.pipelines.CurationJob.release]] stage,
+    * whose fingerprint the `keyed` marker keeps out (SnapshotsSpec's
+    * keyed-FIRST root test). Once a monotone id lands, the carried
+    * field takes over and no bound applies, so timestamp-derived
+    * monotone ids (epoch millis ≈ 1.8e12 > 2^40) keep their replay
+    * protection through compaction. */
   private val MaxPlausibleMonotoneId = 1L << 40
 
-  /** Max MONOTONE batch id across `vs` — the pre-`maxBatchId`-field
-    * fallback only: keyed versions excluded by marker, legacy keyed
-    * versions excluded by the plausibility bound. */
-  private def monotoneChainMax(root: String, vs: Seq[Long]): Option[Long] =
-    vs.filterNot(isKeyed(root, _))
-      .flatMap(batchIdOf(root, _))
-      .filter(b => math.abs(b) <= MaxPlausibleMonotoneId)
-      .reduceOption(_ max _)
-
   /** The HISTORY-WIDE max monotone batch id as of version `v` — the
-    * replay-guard watermark [[commitBatch]]/[[commitAppend]] check.
-    * Every commit carries the running max forward in its manifest
-    * (`maxBatchId`), so the guard survives interleaved unkeyed
-    * commits whose own `batchId` field is absent. Manifests written
-    * before the field existed fall back to the max over `v`'s delta
-    * chain (the pre-field semantics, as `compact` carried it). */
-  def maxBatchIdOf(root: String, v: Long): Option[Long] = {
-    manifestText(root, v)
-      .flatMap("\"maxBatchId\":(-?\\d+)".r.findFirstMatchIn(_))
-      .map(_.group(1).toLong)
-      // legacy fallback: only MONOTONE batch ids count toward the
-      // watermark — a keyed fingerprint in the chain is an identity,
-      // not an ordering (pre-marker keyed commits are caught by the
-      // plausibility bound in monotoneChainMax)
-      .orElse(monotoneChainMax(root, chainVersions(root, v)))
-  }
+    * replay-guard watermark [[commitGuarded]] checks. Every commit
+    * carries the running max forward in its manifest (`maxBatchId`),
+    * so the guard survives interleaved unkeyed commits whose own
+    * `batchId` field is absent. A manifest with no such field — one
+    * written before the field existed, or any commit on a root that
+    * has seen no monotone batch id yet (a keyed-first root) — falls
+    * back to the max over `v`'s delta chain: keyed versions excluded
+    * by marker, pre-marker keyed versions by [[MaxPlausibleMonotoneId]]
+    * (the pre-field semantics, as `compact` carried it). */
+  def maxBatchIdOf(root: String, v: Long): Option[Long] =
+    manifestOf(root, v).flatMap(_.maxBatchId).orElse(
+      chain(root, v).filterNot(_.keyed).flatMap(_.batchId)
+        .filter(b => math.abs(b) <= MaxPlausibleMonotoneId)
+        .reduceOption(_ max _))
 
   /** Result of [[commitInternal]]: the version the caller should use,
     * and whether THIS call wrote it (false = the under-lock guard
     * found the work already done by a racing writer). */
   private final case class Committed(version: Long, committed: Boolean)
 
-  private def commitInternal(df: DataFrame, root: String, batchId: Option[Long],
-      partitionCols: Seq[String] = Seq.empty, delta: Boolean = false,
-      monotone: Boolean = true, tombstoneKey: Option[String] = None,
-      mergeKey: Option[String] = None, compacted: Boolean = false,
-      guard: Option[() => Boolean] = None,
+  /** Stage `df` and commit it under a manifest built from `template`
+    * (its batch id and flags; version, rows, parent, ts, cid and
+    * maxBatchId are filled in at commit). `guard` is re-checked under
+    * the commit lock: false discards the stage and reports the current
+    * latest with `committed = false`. */
+  private def commitInternal(df: DataFrame, root: String, template: Manifest,
+      partitionCols: Seq[String] = Seq.empty, guard: () => Boolean = () => true,
       statsCols: Seq[String] = Seq.empty): Committed = {
     // 1. STAGE the data (distributed, lock-free — concurrent writers
     // each write a private stage dir). Hive-partitioned commits
@@ -784,9 +778,8 @@ object Snapshots {
       // per commit (every absorb runs 2-3 commits; a week gate ~30)
       val rows = stats.map(_.map(_.rows).sum)
         .getOrElse(FileStats.rowCount(df.sparkSession, Paths.get(stage)))
-      commitStaged(root, stage, rows, batchId, delta, monotone,
-        tombstoneKey, mergeKey, compacted, guard, hb = Some(hb),
-        stats = stats, statsCols = statsCols)
+      commitStaged(root, stage, template.copy(rows = rows), guard, hb,
+        stats, statsCols)
     } finally hb.stop()
   }
 
@@ -794,13 +787,10 @@ object Snapshots {
     * claim + metadata + pointer under the per-root commit lock (O(1)
     * file ops only — the expensive distributed write is already
     * done). */
-  private def commitStaged(root: String, stage: String, rows: Long,
-      batchId: Option[Long], delta: Boolean, monotone: Boolean,
-      tombstoneKey: Option[String], mergeKey: Option[String],
-      compacted: Boolean, guard: Option[() => Boolean],
-      hb: Option[StageHeartbeat] = None,
-      stats: Option[Seq[FileStats.FileStat]] = None,
-      statsCols: Seq[String] = Seq.empty): Committed = {
+  private def commitStaged(root: String, stage: String, template: Manifest,
+      guard: () => Boolean, hb: StageHeartbeat,
+      stats: Option[Seq[FileStats.FileStat]],
+      statsCols: Seq[String]): Committed = {
     withCommitLock(root) {
       // the stage is ours to mutate from here — STOP the heartbeat
       // before any delete/move on it: stop() removes the file and
@@ -809,7 +799,7 @@ object Snapshots {
       // directory delete can never race a recreation. The heartbeat
       // did its job: it kept the stage alive through however long
       // this writer waited on a contended lock.
-      hb.foreach(_.stop())
+      hb.stop()
       // revalidate under the lock: a racing writer may have committed
       // this batch id / key while we staged — the loser discards its
       // stage and reports the current latest. A guard that THROWS
@@ -817,7 +807,7 @@ object Snapshots {
       // propagates: the caller must see the contract violation loudly,
       // and the stage must not linger until the abandonment sweep.
       val pass =
-        try guard.forall(g => g())
+        try guard()
         catch {
           case e: Throwable =>
             deleteRecursively(Paths.get(stage))
@@ -839,11 +829,7 @@ object Snapshots {
         // explicit readVersion/changesBetween — a chain that never
         // existed, served as silently wrong rows. The dead timeline
         // stays readable only UNTIL the first post-rollback commit.
-        versions(root).filter(_ >= next).foreach { v =>
-          Files.deleteIfExists(manifest(root, v))
-          Files.deleteIfExists(statsPath(root, v))
-          deleteRecursively(Paths.get(dataDir(root, v)))
-        }
+        versions(root).filter(_ >= next).foreach(dropVersion(root, _))
         deleteRecursively(Paths.get(dataDir(root, next)))
         // an orphan sidecar from a writer that crashed between its
         // sidecar write and its manifest write would otherwise be
@@ -856,38 +842,17 @@ object Snapshots {
         // manifest (metadata — written before the pointer so a reader
         // that sees the pointer always finds the manifest)
         Files.createDirectories(manifest(root, next).getParent)
-        val batchField = batchId.map(b => s""","batchId":$b""").getOrElse("")
-        val deltaField = if (delta) ""","delta":true""" else ""
-        // a tombstone rides the delta-chain machinery (chain resolution,
-        // watermark carry, vacuum protection) but flips the reader's fold
-        // from union to anti-join
-        val tombField = tombstoneKey
-          .map(k => s""","tombstoneKey":"$k"""").getOrElse("")
-        // a merge rides the same machinery; the reader's fold becomes
-        // anti-join-keys-then-union-rows (atomic upsert)
-        val mergeField = mergeKey
-          .map(k => s""","mergeKey":"$k"""").getOrElse("")
-        // keyed marker: lets watermark readers distinguish an unordered
-        // content-fingerprint batchId from a monotone one
-        val keyedField = if (!monotone && batchId.nonEmpty) ""","keyed":true""" else ""
-        // wall-clock commit time: powers AS OF reads ([[readAsOf]]).
-        // Written under the lock, so timestamps are non-decreasing in
-        // version order on any one host's clock
-        val tsField = s""","ts":${System.currentTimeMillis()}"""
-        // unique COMMIT ID: the ABA guard for compact's chain pin and
-        // the schema cache — version numbers are reused by
-        // rollback-then-recommit and wall-clock millis can collide or
-        // regress, a UUID cannot
-        val cidField = s""","cid":"${java.util.UUID.randomUUID()}""""
-        // invisible-rewrite marker (see [[compact]] / [[isCompacted]])
-        val compField = if (compacted) ""","compacted":true""" else ""
         // running max of monotone batch ids, carried through EVERY commit
         // (keyed fingerprints excluded — see commitKeyed); read under the
         // lock, so an interleaved writer's batch id is never missed
         val prevMax = latestVersion(root).flatMap(maxBatchIdOf(root, _))
-        val newMax = (prevMax.toSeq ++ (if (monotone) batchId.toSeq else Seq.empty))
-          .reduceOption(_ max _)
-        val maxField = newMax.map(b => s""","maxBatchId":$b""").getOrElse("")
+        val m = template.copy(version = next, parent = next - 1,
+          // written under the lock, so commit times are non-decreasing
+          // in version order on any one host's clock
+          ts = Some(System.currentTimeMillis()),
+          cid = Some(java.util.UUID.randomUUID().toString),
+          maxBatchId = (prevMax ++ template.batchId.filterNot(_ => template.keyed))
+            .reduceOption(_ max _))
         // stats sidecar BEFORE the pointer (same ordering rule as the
         // manifest: a reader that sees the pointer finds the sidecar)
         stats.foreach { fs =>
@@ -895,9 +860,7 @@ object Snapshots {
             FileStats.toJson(next, statsCols, fs)
               .getBytes(StandardCharsets.UTF_8)); ()
         }
-        Files.write(manifest(root, next),
-          s"""{"version":$next,"rows":$rows,"parent":${next - 1}$tsField$cidField$batchField$deltaField$tombField$mergeField$keyedField$compField$maxField}"""
-            .getBytes(StandardCharsets.UTF_8))
+        Files.write(manifest(root, next), m.toJson.getBytes(StandardCharsets.UTF_8))
         // 3. commit point: atomic pointer swap
         io.publishPointer(root, next.toString.getBytes(StandardCharsets.UTF_8))
         Committed(next, committed = true)
@@ -927,13 +890,11 @@ object Snapshots {
     (String, Long, String), org.apache.spark.sql.types.StructType]()
 
   private def memberSchema(spark: SparkSession, root: String,
-      cv: Long): org.apache.spark.sql.types.StructType = {
-    val key = (root, cv, commitIdentity(root, cv))
-    memberSchemaCache.computeIfAbsent(key, _ => {
-      val dd = dataDir(root, cv)
+      m: Manifest): org.apache.spark.sql.types.StructType =
+    memberSchemaCache.computeIfAbsent((root, m.version, m.identity), _ => {
+      val dd = dataDir(root, m.version)
       spark.read.option("basePath", dd).parquet(dd).schema
     })
-  }
 
   /** Scan ONE version's own data dir. When the version committed a
     * stats sidecar, the scan goes through [[StatsFileIndex]]: the
@@ -943,15 +904,45 @@ object Snapshots {
     * [[readPruned]] side door — every reader of a stats-committed
     * table data-skips for free (the Delta/Iceberg log-backed-index
     * mechanism). Versions without a sidecar scan exactly as before. */
-  private def memberScan(spark: SparkSession, root: String, cv: Long): DataFrame = {
-    val dd = dataDir(root, cv)
-    statsOf(root, cv) match {
+  private def memberScan(spark: SparkSession, root: String, m: Manifest): DataFrame = {
+    val dd = dataDir(root, m.version)
+    statsOf(root, m.version) match {
       case Some(st) if st.nonEmpty =>
         StatsFileIndex.scan(spark, dd, st,
-          dataSchema = Some(memberSchema(spark, root, cv)))
+          dataSchema = Some(memberSchema(spark, root, m)))
       case _ =>
-        spark.read.schema(memberSchema(spark, root, cv))
+        spark.read.schema(memberSchema(spark, root, m))
           .option("basePath", dd).parquet(dd)
+    }
+  }
+
+  /** THE chain fold behind [[readVersion]] and [[readPruned]]: the
+    * chain's members OLDEST-FIRST, data versions union in via `rows`
+    * (None = the member contributes no branch), TOMBSTONE versions
+    * anti-join their keys out of everything accumulated so far, MERGE
+    * versions anti-join their keys and then union their rows — one
+    * atomic upsert. Key frames always read whole ([[memberScan]];
+    * tombstone and merge versions carry no stats sidecar). */
+  private def foldChain(spark: SparkSession, root: String, members: Seq[Manifest])(
+      rows: Manifest => Option[DataFrame]): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.broadcast
+    // allowMissingColumns: the schema-evolution contract — rows from
+    // before a column was added read as null for it (write-time
+    // validation in commitAppend keeps accidental drift out)
+    def union(a: Option[DataFrame], b: Option[DataFrame]) = (a, b) match {
+      case (Some(x), Some(y)) => Some(x.unionByName(y, allowMissingColumns = true))
+      case _ => a.orElse(b)
+    }
+    members.foldLeft(Option.empty[DataFrame]) { (acc, m) =>
+      def withoutKeys(k: String) = {
+        val keys = memberScan(spark, root, m)
+        acc.map(_.join(broadcast(keys.select(keys(k))), Seq(k), "left_anti"))
+      }
+      (m.tombstoneKey, m.mergeKey) match {
+        case (Some(k), _) => withoutKeys(k)
+        case (_, Some(k)) => union(withoutKeys(k), rows(m))
+        case _ => union(acc, rows(m))
+      }
     }
   }
 
@@ -970,32 +961,10 @@ object Snapshots {
     * (Catalyst pushes left-side predicates to the left child only),
     * so key frames always list whole — a merge row outside a pushed
     * range still replaces the chain row it superseded. */
-  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    require(Files.exists(manifest(root, v)), s"version $v was never committed (or vacuumed)")
-    chainVersions(root, v).reverse
-      .foldLeft(Option.empty[DataFrame]) { (acc, cv) =>
-        val df = memberScan(spark, root, cv)
-        (tombstoneKeyOf(root, cv), mergeKeyOf(root, cv)) match {
-          case (Some(k), _) =>
-            acc.map(_.join(broadcast(df.select(df(k))), Seq(k), "left_anti"))
-          // MERGE: its keys replace, its rows join — one atomic upsert
-          case (_, Some(k)) =>
-            Some(acc
-              .map(_.join(broadcast(df.select(df(k))), Seq(k), "left_anti")
-                .unionByName(df, allowMissingColumns = true))
-              .getOrElse(df))
-          // allowMissingColumns: the schema-evolution contract — rows
-          // from before a column was added read as null for it (write-
-          // time validation in commitAppend keeps accidental drift out)
-          case _ =>
-            Some(acc.map(_.unionByName(df, allowMissingColumns = true))
-              .getOrElse(df))
-        }
-      }
+  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
+    foldChain(spark, root, chain(root, v))(m => Some(memberScan(spark, root, m)))
       .getOrElse(throw new IllegalStateException(
         s"version $v under $root resolves to no data (tombstone-only chain)"))
-  }
 
   /** The per-file column stats recorded for a version, if its commit
     * declared `statsCols` — the data-skipping metadata
@@ -1036,16 +1005,9 @@ object Snapshots {
   def readPruned(spark: SparkSession, root: String,
       ranges: Seq[FileStats.ColRange],
       version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
+    import org.apache.spark.sql.functions.lit
     val v = version.orElse(latestVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
-    require(Files.exists(manifest(root, v)),
-      s"version $v was never committed (or vacuumed)")
-    def fullScan(cv: Long): DataFrame = {
-      val dd = dataDir(root, cv)
-      spark.read.schema(memberSchema(spark, root, cv))
-        .option("basePath", dd).parquet(dd)
-    }
     // a fully-pruned member returns None and contributes NO union
     // branch at all: a `where(false)` placeholder would still list
     // the member's dir and read a footer for schema at plan time, so
@@ -1055,39 +1017,18 @@ object Snapshots {
     // mirror_skip probe measured the placeholder form growing 4.6x
     // over 16x history; member-skipping is what makes the claim
     // "cost tracks PENDING versions" true)
-    def prunedScan(cv: Long): Option[DataFrame] = {
-      val dd = dataDir(root, cv)
-      statsOf(root, cv) match {
-        case None => Some(fullScan(cv))
+    def prunedScan(m: Manifest): Option[DataFrame] =
+      statsOf(root, m.version) match {
+        case None => Some(memberScan(spark, root, m))
         case Some(stats) =>
+          val dd = dataDir(root, m.version)
           val kept = stats.filter(FileStats.survives(_, ranges))
             .map(f => s"$dd/${f.path}")
           if (kept.isEmpty) None
-          else Some(spark.read.schema(memberSchema(spark, root, cv))
+          else Some(spark.read.schema(memberSchema(spark, root, m))
             .option("basePath", dd).parquet(kept: _*))
       }
-    }
-    def union(acc: Option[DataFrame], next: Option[DataFrame]) =
-      (acc, next) match {
-        case (Some(a), Some(n)) =>
-          Some(a.unionByName(n, allowMissingColumns = true))
-        case (a, n) => a.orElse(n)
-      }
-    val chain = chainVersions(root, v)
-    chain.reverse
-      .foldLeft(Option.empty[DataFrame]) { (acc, cv) =>
-        (tombstoneKeyOf(root, cv), mergeKeyOf(root, cv)) match {
-          case (Some(k), _) =>
-            val keys = fullScan(cv)
-            acc.map(_.join(broadcast(keys.select(keys(k))), Seq(k), "left_anti"))
-          case (_, Some(k)) =>
-            val keys = fullScan(cv)
-            union(acc.map(_.join(broadcast(keys.select(keys(k))), Seq(k),
-              "left_anti")), prunedScan(cv))
-          case _ =>
-            union(acc, prunedScan(cv))
-        }
-      }
+    foldChain(spark, root, chain(root, v))(prunedScan)
       // every member pruned away: an empty frame with the table's
       // FULL (union) schema — schema evolution means the base member
       // alone could miss later columns the residual names; this rare
@@ -1096,37 +1037,10 @@ object Snapshots {
       .filter(FileStats.residual(ranges))
   }
 
-  /** The unique commit id (UUID) of a version, if recorded — every
-    * manifest written since the field existed has one; it is THE
-    * identity of a commit (version numbers are reused by
-    * rollback-then-recommit, wall-clock millis collide). */
-  def commitIdOf(root: String, v: Long): Option[String] =
-    manifestText(root, v).flatMap(
-      "\"cid\":\"([^\"]+)\"".r.findFirstMatchIn(_)).map(_.group(1))
-
-  /** Comparable identity string for ABA guards: the commit id when
-    * present, else the legacy timestamp (pre-cid manifests), else a
-    * missing-manifest marker — two reads agree iff they saw the SAME
-    * manifest bytes for this version. */
+  /** [[Manifest.identity]] of version `v`, "absent" when it has no
+    * manifest. */
   private def commitIdentity(root: String, v: Long): String =
-    commitIdOf(root, v)
-      .orElse(commitTsOf(root, v).map(t => s"ts:$t"))
-      .getOrElse("absent")
-
-  /** Whether a version is a COMPACTION — a full rewrite whose logical
-    * content equals the chain it replaced (written by [[compact]]).
-    * Invisible to readers by construction; a change-feed follower
-    * skips it, where a fresh [[commit]] (a real content replace) is a
-    * feed error. */
-  def isCompacted(root: String, v: Long): Boolean =
-    manifestText(root, v).exists(_.contains("\"compacted\":true"))
-
-  /** Wall-clock commit time of a version (epoch millis), if recorded —
-    * manifests from before the field existed have none and are treated
-    * by [[readAsOf]] as older than any timestamp. */
-  def commitTsOf(root: String, v: Long): Option[Long] =
-    manifestText(root, v).flatMap(
-      "\"ts\":(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toLong)
+    manifestOf(root, v).fold("absent")(_.identity)
 
   /** TIMESTAMP time travel — "the table as of last midnight": resolve
     * the newest version whose commit time is ≤ `tsMs` and read it.
@@ -1146,7 +1060,7 @@ object Snapshots {
       throw new IllegalArgumentException(s"no committed version under $root"))
     val v = versions(root)
       .filter(_ <= live)
-      .filter(v => commitTsOf(root, v).getOrElse(0L) <= tsMs)
+      .filter(v => manifestOf(root, v).flatMap(_.ts).getOrElse(0L) <= tsMs)
       .sorted.lastOption
       .getOrElse(throw new IllegalArgumentException(
         s"no version under $root committed at or before $tsMs"))
@@ -1235,6 +1149,14 @@ object Snapshots {
     vacuumLocked(root, keep)
   }
 
+  /** Delete one version, manifest first: a crash part-way leaves
+    * data-without-manifest (invisible), never the reverse. */
+  private def dropVersion(root: String, v: Long): Unit = {
+    Files.deleteIfExists(manifest(root, v))
+    Files.deleteIfExists(statsPath(root, v))
+    deleteRecursively(Paths.get(dataDir(root, v)))
+  }
+
   private def vacuumLocked(root: String, keep: Int): Seq[Long] = {
     val latest = latestVersion(root).getOrElse(return Seq.empty)
     // sweep abandoned stage dirs from crashed writers. "Abandoned" is
@@ -1303,11 +1225,7 @@ object Snapshots {
       catch { case _: IllegalArgumentException => Seq(v) }).toSet
     val drop = versions(root).filter(v =>
       v < cutoff && v != latest && !protectedChain(v))
-    drop.foreach { v =>
-      Files.deleteIfExists(manifest(root, v))
-      Files.deleteIfExists(statsPath(root, v))
-      deleteRecursively(Paths.get(dataDir(root, v)))
-    }
+    drop.foreach(dropVersion(root, _))
     val dropped = drop.toSet
     memberSchemaCache.keySet.removeIf(k => k._1 == root && dropped(k._2))
     drop

@@ -92,7 +92,7 @@ object ChangeFeed {
           "bootstrapped from a current base snapshot)")
     }
     pending.flatMap { v =>
-      if (Snapshots.isCompacted(root, v)) None // invisible rewrite
+      if (Snapshots.manifestOf(root, v).exists(_.compacted)) None // invisible rewrite
       else {
         require(Snapshots.isDelta(root, v),
           s"change feed on $root hit a full rewrite at version $v — a fresh " +

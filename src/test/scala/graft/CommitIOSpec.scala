@@ -271,11 +271,11 @@ class CommitIOSpec extends AnyFunSuite {
     val root = tmpRoot()
     Snapshots.commit(Seq(1L).toDF("id"), root)
     Snapshots.commitAppend(Seq(2L).toDF("id"), root)
-    val cid1 = Snapshots.commitIdOf(root, 1L)
+    val cid1 = Snapshots.manifestOf(root, 1L).flatMap(_.cid)
     assert(cid1.nonEmpty, "manifest missing cid")
     Snapshots.rollback(root, 0L)
     Snapshots.commitAppend(Seq(3L).toDF("id"), root) // reuses v1
-    val cid2 = Snapshots.commitIdOf(root, 1L)
+    val cid2 = Snapshots.manifestOf(root, 1L).flatMap(_.cid)
     assert(cid2.nonEmpty && cid2 != cid1,
       "recommitted version must carry a fresh commit id (ABA guard)")
   }
@@ -284,8 +284,8 @@ class CommitIOSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpRoot()
     Snapshots.commit(Seq(1L).toDF("id"), root)
-    val prev = sys.props.get("graft.snapshots.stageAbandonCutoffSec")
-    sys.props("graft.snapshots.stageAbandonCutoffSec") = "2"
+    val prev = Snapshots.stageAbandonCutoffMs
+    Snapshots.stageAbandonCutoffMs = 2000L
     try {
       val stage = Paths.get(s"$root/data/stage-test")
       Files.createDirectories(stage)
@@ -315,12 +315,7 @@ class CommitIOSpec extends AnyFunSuite {
       Thread.sleep(3000)
       Snapshots.vacuum(root, keep = 7)
       assert(!Files.exists(stage), "abandoned stage not swept")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.snapshots.stageAbandonCutoffSec") = v
-        case None => sys.props -= "graft.snapshots.stageAbandonCutoffSec"
-      }
-    }
+    } finally Snapshots.stageAbandonCutoffMs = prev
   }
 
   test("wipe preserves the lock file's inode (cross-process mutual exclusion survives a wipe)") {
@@ -466,10 +461,10 @@ class CommitIOSpec extends AnyFunSuite {
     Snapshots.commit(Seq(1L).toDF("id"), root)
     Snapshots.commitAppend(Seq(2L).toDF("id"), root)
     val cv = Snapshots.compact(spark, root)
-    assert(Snapshots.isCompacted(root, cv), "compact not marked compacted")
-    assert(!Snapshots.isCompacted(root, 0L))
+    assert(Snapshots.manifestOf(root, cv).exists(_.compacted), "compact not marked compacted")
+    assert(!Snapshots.manifestOf(root, 0L).exists(_.compacted))
     val fresh = Snapshots.commit(Seq(9L).toDF("id"), root)
-    assert(!Snapshots.isCompacted(root, fresh))
+    assert(!Snapshots.manifestOf(root, fresh).exists(_.compacted))
   }
 
   test("absorbBatch: a failed bands commit leaves no shingles append running after the throw") {

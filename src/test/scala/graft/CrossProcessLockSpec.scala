@@ -88,7 +88,7 @@ class CrossProcessLockSpec extends AnyFunSuite {
     assert(rows.size == expect.size, s"row count ${rows.size} != ${expect.size}")
     assert(rows.toSet == expect, "rows lost or doubled across processes")
     // every manifest carries a unique commit id and resolves its chain
-    val cids = (0L to 15L).map(v => Snapshots.commitIdOf(root, v))
+    val cids = (0L to 15L).map(v => Snapshots.manifestOf(root, v).flatMap(_.cid))
     assert(cids.forall(_.nonEmpty) && cids.distinct.size == cids.size)
     Snapshots.chainVersions(root, 15L)
     // no stage dir was promoted without its manifest (loser discard)

@@ -189,7 +189,8 @@ class GraphBSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     val base = rows()
     assert(base.nonEmpty, "fixture produced no estimated edges")
-    sys.props("graft.ejacc.broadcastMaxWedges") = "0"
+    val prev = GraphB.ejaccBroadcastMaxWedges
+    GraphB.ejaccBroadcastMaxWedges = 0L
     try {
       val plan = GraphB.edgeJaccardEstimate(spark, dir)
         .queryExecution.executedPlan.toString
@@ -197,7 +198,7 @@ class GraphBSpec extends AnyFunSuite {
         s"guarded path did not fall back to shuffle_hash:\n$plan")
       assert(rows() == base,
         "fallback join strategy changed the re-score rows")
-    } finally { sys.props.remove("graft.ejacc.broadcastMaxWedges"); () }
+    } finally GraphB.ejaccBroadcastMaxWedges = prev
   }
 
   test("kmv: estimates bracket exact counts within sketch error") {

@@ -26,7 +26,7 @@ class LshIndexSpec extends AnyFunSuite {
 
   test("probe broadcast guard: forced shuffle_hash fallback returns identical pairs") {
     // r14: the batch band frame broadcasts outright under
-    // BroadcastMaxBandRows; a backfill-sized batch must fall back to
+    // broadcastMaxBandRows; a backfill-sized batch must fall back to
     // the bounded-memory shuffle_hash plan with the same result.
     val root = freshRoot()
     LshIndex.build(corpus, root)
@@ -36,10 +36,11 @@ class LshIndexSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     val bcast = pairs()
     assert(bcast.nonEmpty, "planted batch produced no candidates")
-    sys.props("graft.lsh.broadcastMaxBandRows") = "0"
+    val prev = LshIndex.broadcastMaxBandRows
+    LshIndex.broadcastMaxBandRows = 0L
     try assert(pairs() == bcast,
       "shuffle_hash fallback changed the candidate pairs")
-    finally { sys.props.remove("graft.lsh.broadcastMaxBandRows"); () }
+    finally LshIndex.broadcastMaxBandRows = prev
   }
 
   test("absorb equals the live incremental reference (candidates + verify)") {

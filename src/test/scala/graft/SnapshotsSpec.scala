@@ -104,7 +104,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.commitBatch(Seq(99L).toDF("id"), root, batchId = 1) == 1L)
     assert(Snapshots.versions(root) == Seq(0L, 1L))
     assert(Snapshots.read(spark, root).head().getLong(0) == 2L)
-    assert(Snapshots.batchIdOf(root, 1).contains(1L))
+    assert(Snapshots.manifestOf(root, 1).flatMap(_.batchId).contains(1L))
     // next live batch continues
     assert(Snapshots.commitBatch(Seq(3L).toDF("id"), root, batchId = 2) == 2L)
     assert(Snapshots.read(spark, root).head().getLong(0) == 3L)
@@ -263,7 +263,7 @@ class SnapshotsSpec extends AnyFunSuite {
     val m = Paths.get(s"$root/manifests/v$v0.json")
     Files.writeString(m,
       Files.readString(m).replace(""","keyed":true""", ""))
-    assert(!Snapshots.isKeyed(root, v0))
+    assert(!Snapshots.manifestOf(root, v0).exists(_.keyed))
     // the legacy fallback must still refuse the implausibly large id
     // as a monotone watermark — else every later append no-ops
     assert(Snapshots.maxBatchIdOf(root, v0).isEmpty,
@@ -304,7 +304,7 @@ class SnapshotsSpec extends AnyFunSuite {
     val vDel = Snapshots.commitDelete(
       Seq(2L, 4L).toDF("id"), root, "id", Some(1L))                        // v2
     assert(Snapshots.isDelta(root, vDel) &&
-      Snapshots.tombstoneKeyOf(root, vDel).contains("id"))
+      Snapshots.manifestOf(root, vDel).flatMap(_.tombstoneKey).contains("id"))
     assert(Snapshots.read(spark, root)
       .select(col("id")).as[Long].collect().toSet == Set(1L, 3L),
       "deleted keys still visible")
@@ -344,7 +344,7 @@ class SnapshotsSpec extends AnyFunSuite {
     // the compacted manifest must remember id 1 — otherwise a
     // re-delivered batch would append on top of data that already
     // contains it and the table would double-count
-    assert(Snapshots.batchIdOf(root, v3).contains(1L),
+    assert(Snapshots.manifestOf(root, v3).flatMap(_.batchId).contains(1L),
       "compact dropped the chain's max batchId")
     assert(Snapshots.commitAppend(Seq(7L).toDF("id"), root,
       Seq.empty, Some(1L)) == v3, "replayed batch re-appended after compact")
@@ -543,7 +543,7 @@ class SnapshotsSpec extends AnyFunSuite {
     val vm = Snapshots.commitMerge(
       Seq((2L, "b2"), (4L, "d")).toDF("id", "v"), root, "id", Seq.empty, Some(1L))
     assert(Snapshots.isDelta(root, vm) &&
-      Snapshots.mergeKeyOf(root, vm).contains("id"))
+      Snapshots.manifestOf(root, vm).flatMap(_.mergeKey).contains("id"))
     val after = Snapshots.read(spark, root).as[(Long, String)].collect().toMap
     assert(after == Map(1L -> "a", 2L -> "b2", 3L -> "c", 4L -> "d"),
       s"merge wrong: $after")
@@ -599,20 +599,20 @@ class SnapshotsSpec extends AnyFunSuite {
     val between = System.currentTimeMillis()
     Thread.sleep(5)
     Snapshots.commit(Seq(2L).toDF("id"), root)                 // v1
-    assert(Snapshots.commitTsOf(root, 0).exists(_ < between) &&
-      Snapshots.commitTsOf(root, 1).exists(_ > between))
+    assert(Snapshots.manifestOf(root, 0).flatMap(_.ts).exists(_ < between) &&
+      Snapshots.manifestOf(root, 1).flatMap(_.ts).exists(_ > between))
     assert(Snapshots.readAsOf(spark, root, between).head().getLong(0) == 1L)
     assert(Snapshots.readAsOf(spark, root,
       System.currentTimeMillis()).head().getLong(0) == 2L)
     // before any commit: explicit error, not a silent empty read
     intercept[IllegalArgumentException](
-      Snapshots.readAsOf(spark, root, Snapshots.commitTsOf(root, 0).get - 1))
+      Snapshots.readAsOf(spark, root, Snapshots.manifestOf(root, 0).flatMap(_.ts).get - 1))
     // a LEGACY manifest (no ts field) counts as infinitely old: strip
     // v0's field and it still resolves for any timestamp
     val m = Paths.get(s"$root/manifests/v0.json")
     Files.writeString(m,
       Files.readString(m).replaceAll(""","ts":\d+""", ""))
-    assert(Snapshots.commitTsOf(root, 0).isEmpty)
+    assert(Snapshots.manifestOf(root, 0).flatMap(_.ts).isEmpty)
     assert(Snapshots.readAsOf(spark, root, between).head().getLong(0) == 1L)
     // AS OF honors the LIVE timeline: after a rollback, the rolled-away
     // v1 is a dead-timeline audit artifact (explicit readVersion only)
@@ -670,5 +670,84 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commitAppend(Seq(3L).toDF("id"), root, Seq.empty, Some(3L))
     assert(Snapshots.read(spark, root).as[Long].collect().toSet ==
       Set(0L, 1L, 2L, 3L), "repaired history wrong")
+  }
+
+  // ------------------------------------------------- manifest record
+
+  test("key columns named with a quote or a backslash survive delete and merge") {
+    import spark.implicits._
+    for (k <- Seq("k\"ey", "k\\ey")) {
+      val root = tmpRoot()
+      Snapshots.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF(k, "v"), root)   // v0
+      val vDel = Snapshots.commitDelete(Seq(2L).toDF(k), root, k)                   // v1
+      val vm = Snapshots.commitMerge(
+        Seq((3L, "C"), (4L, "d")).toDF(k, "v"), root, k)                            // v2
+      // the manifest is valid JSON that names the key column exactly
+      for ((v, field) <- Seq(vDel -> "tombstoneKey", vm -> "mergeKey")) {
+        val text = Files.readString(Paths.get(s"$root/manifests/v$v.json"))
+        assert(new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(text).get(field).asText == k, text)
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long](k), r.getAs[String]("v"))).toSet
+      assert(rows(Snapshots.read(spark, root)) == Set((1L, "a"), (3L, "C"), (4L, "d")))
+      assert(rows(Snapshots.readVersion(spark, root, vDel)) == Set((1L, "a"), (3L, "c")))
+      val del = Snapshots.changesOf(spark, root, vDel).collect()
+      assert(del.map(r => (r.getAs[Long](k), r.getAs[String]("_change_type"))).toSeq ==
+        Seq((2L, "delete")))
+      val up = Snapshots.changesOf(spark, root, vm).collect()
+      assert(up.map(r => (r.getAs[Long](k), r.getAs[String]("_change_type"))).toSet ==
+        Set((3L, "upsert"), (4L, "upsert")))
+    }
+  }
+
+  test("a chain read parses each member's manifest once") {
+    import spark.implicits._
+    val root = tmpRoot()
+    Snapshots.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), root) // v0
+    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "v"), root)                 // v1
+    Snapshots.commitDelete(Seq(2L).toDF("id"), root, "id")                       // v2
+    Snapshots.commitMerge(Seq((3L, "C")).toDF("id", "v"), root, "id")            // v3
+    val chainLen = Snapshots.chainVersions(root, 3L).size
+    assert(chainLen == 4)
+    def opened(body: => org.apache.spark.sql.DataFrame) = {
+      val c0 = Snapshots.manifestReads.get()
+      val df = body
+      (Snapshots.manifestReads.get() - c0, df)
+    }
+    val (readOpens, all) = opened(Snapshots.read(spark, root))
+    val (prunedOpens, pruned) = opened(Snapshots.readPruned(spark, root,
+      Seq(graft.sources.FileStats.ColRange("id", Some(1L), Some(4L)))))
+    assert(readOpens == chainLen, s"read opened $readOpens manifests")
+    assert(prunedOpens == chainLen, s"readPruned opened $prunedOpens manifests")
+    val want = Set((1L, "a"), (3L, "C"), (4L, "d"))
+    assert(all.as[(Long, String)].collect().toSet == want)
+    assert(pruned.as[(Long, String)].collect().toSet == want)
+  }
+
+  test("manifest text per commit kind (ts and cid masked)") {
+    import spark.implicits._
+    val root = tmpRoot()
+    def rows(ids: Long*) = ids.map(i => (i, s"r$i")).toDF("id", "v")
+    Snapshots.commit(rows(1L, 2L), root)                                   // v0 plain
+    Snapshots.commitBatch(rows(1L, 2L, 3L), root, batchId = 1L)            // v1 batch
+    Snapshots.commitKeyed(rows(1L, 2L, 3L), root, key = 77L)               // v2 keyed
+    Snapshots.commitAppend(rows(4L), root, Seq.empty, Some(2L))            // v3 delta
+    Snapshots.commitDelete(Seq(2L).toDF("id"), root, "id", Some(3L))       // v4 tombstone
+    Snapshots.commitMerge(Seq((3L, "C")).toDF("id", "v"), root, "id")      // v5 merge
+    assert(Snapshots.compact(spark, root) == 6L)                           // v6 compacted
+    def masked(v: Int) = Files.readString(Paths.get(s"$root/manifests/v$v.json"))
+      .replaceAll("\"ts\":\\d+", "\"ts\":0")
+      .replaceAll("\"cid\":\"[^\"]*\"", "\"cid\":\"-\"")
+    val head = (v: Int, n: Int) =>
+      s"""{"version":$v,"rows":$n,"parent":${v - 1},"ts":0,"cid":"-""""
+    assert((0 to 6).map(masked) == Seq(
+      head(0, 2) + "}",
+      head(1, 3) + ""","batchId":1,"maxBatchId":1}""",
+      head(2, 3) + ""","batchId":77,"keyed":true,"maxBatchId":1}""",
+      head(3, 1) + ""","batchId":2,"delta":true,"maxBatchId":2}""",
+      head(4, 1) + ""","batchId":3,"delta":true,"tombstoneKey":"id","maxBatchId":3}""",
+      head(5, 1) + ""","delta":true,"mergeKey":"id","maxBatchId":3}""",
+      head(6, 3) + ""","batchId":3,"compacted":true,"maxBatchId":3}"""))
   }
 }

@@ -214,7 +214,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(Snapshots.versions(root).size == 2, "each micro-batch is a version")
     assert(Snapshots.readVersion(spark, root, 0).count() == 1)
     // a crash-replay of the LAST batch id must be a no-op
-    val last = Snapshots.batchIdOf(root, Snapshots.latestVersion(root).get).get
+    val last = Snapshots.manifestOf(root, Snapshots.latestVersion(root).get).get.batchId.get
     Snapshots.commitBatch(Seq(99L).toDF("user_id"), root, last)
     assert(Snapshots.versions(root).size == 2)
   }
