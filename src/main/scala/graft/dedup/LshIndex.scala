@@ -40,8 +40,10 @@ object LshIndex {
 
   /** Bump when build semantics change: a [[defaultRoot]] from an
     * older layout can then never be silently reused. (2: build also
-    * stores the banding parameters and the `stats` drift baseline.) */
-  val layoutVersion = 2
+    * stores the banding parameters and the `stats` drift baseline; 3:
+    * manifests record the `bmod=`/`dmod=` layout — an older root reads
+    * as unpartitioned and its next compaction would drop the dirs.) */
+  val layoutVersion = 3
 
   /** Hash-partition fanout of the band artifact (`bmod=` dirs) and
     * the shingle artifact (`dmod=` dirs). Partition-pruning probe
@@ -64,6 +66,11 @@ object LshIndex {
   def bandsRoot(root: String): String = s"$root/bands"
   def shinglesRoot(root: String): String = s"$root/shingles"
   def statsRoot(root: String): String = s"$root/stats"
+
+  /** Every artifact root of an index — what nightly maintenance
+    * compacts and vacuums. */
+  def roots(root: String): Seq[String] =
+    Seq(bandsRoot(root), shinglesRoot(root), statsRoot(root))
 
   /** Deterministic index root for a corpus: keyed on an
     * order-independent content fingerprint (an index built from
@@ -103,20 +110,31 @@ object LshIndex {
   private def dmodOf(id: Column): Column = pmod(id, lit(Dmods)).cast("int")
 
   /** Row-local band keys of a (doc_id, text) frame: MinHash
-    * signatures → banded bucket keys → partition tag. No shuffle. */
-  private[graft] def bandsOf(docs: DataFrame, rowsPerBand: Int = 2): DataFrame =
+    * signatures → banded bucket keys → partition tag. No shuffle.
+    * `carry` columns ride through the band explode. */
+  private[graft] def bandsOf(docs: DataFrame, rowsPerBand: Int = 2,
+      carry: Seq[String] = Seq.empty): DataFrame =
     TextDedup.bandKeys(
-      TextDedup.minhashSignatures(docs, "doc_id", "text"), "doc_id",
-      rowsPerBand = rowsPerBand)
+      TextDedup.minhashSignatures(docs, "doc_id", "text", carry = carry), "doc_id",
+      rowsPerBand = rowsPerBand, carry = carry)
       .withColumn("bmod", bmodCol)
 
-  /** Row-local hashed distinct shingle sets (the
-    * [[TextDedup.verifyJaccard]] representation) with the `dmod`
-    * partition tag. */
+  /** [[bandsOf]] banded with the parameters `root` was built with
+    * ([[rowsPerBandOf]]) — every probe of a stored index signs through
+    * here, since a probe banded differently would silently find
+    * nothing. */
+  private[graft] def bandsFor(root: String, docs: DataFrame,
+      carry: Seq[String] = Seq.empty): DataFrame =
+    bandsOf(docs, rowsPerBandOf(root), carry)
+
+  /** A text's hashed distinct shingle set — the
+    * [[TextDedup.verifyJaccard]] representation. */
+  private[graft] def shingleSet(text: Column): Column =
+    array_distinct(transform(TextAnalysis.shinglesOfText(text), s => xxhash64(s)))
+
+  /** Row-local [[shingleSet]]s with the `dmod` partition tag. */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      array_distinct(transform(TextAnalysis.shinglesOfText(col("text")),
-        s => xxhash64(s))).as("shs"),
+    docs.select(col("doc_id"), shingleSet(col("text")).as("shs"),
       dmodOf(col("doc_id")).as("dmod"))
 
   /** Sign the corpus once and persist both artifacts (hash-partition
@@ -219,7 +237,7 @@ object LshIndex {
     * one says new data no longer resembles the indexed corpus. */
   def absorbDrift(spark: SparkSession, root: String,
       batch: DataFrame): DataFrame = {
-    val bb = bandsOf(batch, rowsPerBandOf(root)).localCheckpoint()
+    val bb = bandsFor(root, batch).localCheckpoint()
     val mods = bb.select(col("bmod")).distinct()
       .collect().map(_.getInt(0)).toSeq
     // EMPTY batch: no drift evidence — return an explicit zero row
@@ -356,9 +374,7 @@ object LshIndex {
   def absorbBatch(spark: SparkSession, root: String, batch: DataFrame,
       batchId: Long): DataFrame = {
     // batch-sized; localCheckpoint so probe + append share one signing
-    // (banded with the ROOT's stored parameters — a probe banded
-    // differently would silently find nothing)
-    val bb = bandsOf(batch, rowsPerBandOf(root)).localCheckpoint()
+    val bb = bandsFor(root, batch).localCheckpoint()
     // checkpoint is the phase boundary: the candidates' dmod set must
     // be COLLECTED (bounded ≤ Dmods) before the verification plan can
     // prune on it
@@ -414,11 +430,11 @@ object LshIndex {
     try {
       val fb = pool.submit(new java.util.concurrent.Callable[Long] {
         def call(): Long =
-          Snapshots.commitAppend(bb, bandsRoot(root), Seq("bmod"), Some(batchId))
+          Snapshots.commitAppend(bb, bandsRoot(root), Some(batchId))
       })
       val fs = pool.submit(new java.util.concurrent.Callable[Long] {
         def call(): Long =
-          Snapshots.commitAppend(sh, shinglesRoot(root), Seq("dmod"), Some(batchId))
+          Snapshots.commitAppend(sh, shinglesRoot(root), Some(batchId))
       })
       // wait for BOTH before rethrowing: shutdown() does not stop a
       // running task, so throwing on the first failure would leave the

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Snapshots
@@ -41,26 +41,34 @@ object SpanIndex {
 
   def spansRoot(root: String): String = s"$root/spans"
 
-  /** Deterministic index root (content fingerprint + layout). */
+  /** Every artifact root of an index — what nightly maintenance
+    * compacts and vacuums. */
+  def roots(root: String): Seq[String] = Seq(spansRoot(root))
+
+  /** Deterministic index root (content fingerprint + layout; `v2`:
+    * manifests record the `smod=` layout — an older root reads as
+    * unpartitioned and its next compaction would drop the dirs). */
   def defaultRoot(docs: DataFrame): String = {
     val fp = docs.agg(
       bit_xor(xxhash64(col("doc_id"), col("text"))).as("h"),
       count(lit(1)).as("n")).head()
-    s"/tmp/graft-spanindex/v1/${fp.getLong(0)}-${fp.getLong(1)}"
+    s"/tmp/graft-spanindex/v2/${fp.getLong(0)}-${fp.getLong(1)}"
+  }
+
+  /** Row-local grid-span hashes of a text, in span order: the md5 of
+    * each non-overlapping [[W]]-token window. */
+  private[graft] def spanHashes(text: Column): Column = {
+    val toks = split(text, " ")
+    val nSpans = ceil(size(toks).cast("double") / W).cast("int")
+    transform(sequence(lit(0), nSpans - 1),
+      i => md5(array_join(slice(toks, i * W + 1, lit(W)), " ")))
   }
 
   /** Row-local grid spans of a (doc_id, text) frame:
     * (doc_id, idx, h, smod). No shuffle. */
-  private[graft] def spansOf(docs: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
-    val nSpans = ceil(size(toks).cast("double") / W).cast("int")
-    val spans = transform(sequence(lit(0), nSpans - 1),
-      i => struct(i.as("idx"),
-        md5(array_join(slice(toks, i * W + 1, lit(W)), " ")).as("h")))
-    docs.select(col("doc_id"), explode(spans).as("sp"))
-      .select(col("doc_id"), col("sp.idx").as("idx"), col("sp.h").as("h"))
+  private[graft] def spansOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), posexplode(spanHashes(col("text"))).as(Seq("idx", "h")))
       .withColumn("smod", pmod(xxhash64(col("h")), lit(Smods)).cast("int"))
-  }
 
   /** Hash the corpus's grid spans once and persist them. */
   def build(docs: DataFrame, root: String): Long =
@@ -96,7 +104,7 @@ object SpanIndex {
     * [[graft.pipelines.CurationJob.nightly]]'s `spanRoot`. */
   def nightly(spark: SparkSession, root: String,
       keep: Int = 7): Snapshots.Maintenance =
-    Snapshots.maintain(spark, Seq(spansRoot(root) -> Seq("smod")), keep)
+    Snapshots.maintain(spark, roots(root), keep)
 
   /** Absorb a NEW document batch: per-doc grid-span dup statistics of
     * the batch against corpus ∪ batch (#73's semantics — a span is
@@ -138,7 +146,7 @@ object SpanIndex {
         round(col("n_dup_spans").cast("double") / col("n_spans"), 6))
     // the stats plan above reads the artifact version resolved at
     // Snapshots.read time, so appending afterwards cannot perturb it
-    Snapshots.commitAppend(bsp, spansRoot(root), Seq("smod"), Some(batchId))
+    Snapshots.commitAppend(bsp, spansRoot(root), Some(batchId))
     out
   }
 }

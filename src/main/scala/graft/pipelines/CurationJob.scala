@@ -268,8 +268,7 @@ object CurationJob {
     * Idempotent per `batchId`: every append replays as a no-op and the
     * disposition is replay-stable. */
   def absorbDaily(batch: DataFrame, curatedRoot: String, lshRoot: String,
-      batchId: Long, spanRoot: Option[String] = None,
-      statsCols: Seq[String] = Seq("doc_id")): DataFrame = {
+      batchId: Long, spanRoot: Option[String] = None): DataFrame = {
     val spark = batch.sparkSession
     val gated = batch
       .withColumn("quality_pass", TextAnalysis.qualityPass(col("text")).cast("int"))
@@ -292,15 +291,16 @@ object CurationJob {
         (col("quality_pass") === 1 && col("n_matches") === 0L).cast("int"))
       .localCheckpoint()
     val kept = disposition.filter(col("kept") === 1).select(col("doc_id"))
-    // the curated append records per-file doc_id stats by default:
-    // daily batches carry disjoint id ranges, so the sidecars make a
-    // point/range lookup on the curated corpus touch O(matching
-    // files) instead of the whole chain ([[Snapshots.readPruned]];
-    // [[nightly]] re-records them through compaction). Footer reads
-    // are O(batch files) — noise next to the batch write itself.
+    // the curated append records the sidecars the base commit
+    // declared (commit the base with `doc_id` stats): daily batches
+    // carry disjoint id ranges, so the sidecars make a point/range
+    // lookup on the curated corpus touch O(matching files) instead of
+    // the whole chain ([[Snapshots.readPruned]]; [[nightly]]'s
+    // compaction keeps them). Footer reads are O(batch files) — noise
+    // next to the batch write itself.
     Snapshots.commitAppend(
       batch.join(kept, Seq("doc_id")).select(col("doc_id"), col("text")),
-      curatedRoot, Seq.empty, Some(batchId), statsCols = statsCols)
+      curatedRoot, batchId = Some(batchId))
     disposition
   }
 
@@ -382,29 +382,20 @@ object CurationJob {
     * index ([[graft.dedup.SpanIndex]]) passes `spanRoot` and its
     * `smod=` chain is compacted + vacuumed here too — without it a
     * week of span absorbs becomes a 7-dir chain read with no
-    * maintenance entry point. */
+    * maintenance entry point. Every chain is rewritten in its own
+    * declared layout (the curated corpus keeps the `doc_id` sidecars
+    * its base commit declared). */
   def nightly(spark: org.apache.spark.sql.SparkSession,
       curatedRoot: String, lshRoot: String, keep: Int = 7,
       matchesRoot: Option[String] = None,
       vectorRoot: Option[String] = None,
-      spanRoot: Option[String] = None,
-      curatedStatsCols: Seq[String] = Seq("doc_id")): Maintenance = {
+      spanRoot: Option[String] = None): Maintenance = {
     import graft.dedup.{LshIndex, SpanIndex}
     import graft.similarity.VectorIndex
     Snapshots.maintain(spark,
-      statsCols = Map(curatedRoot -> curatedStatsCols),
-      roots = Seq(
-        curatedRoot -> Seq.empty,
-        LshIndex.bandsRoot(lshRoot) -> Seq("bmod"),
-        LshIndex.shinglesRoot(lshRoot) -> Seq("dmod")) ++
-        matchesRoot.map(_ -> Seq.empty[String]).toSeq ++
-        vectorRoot.toSeq.flatMap(r => Seq(
-          VectorIndex.assignmentsRoot(r) -> Seq("bucket"),
-          VectorIndex.pqCodesRoot(r) -> Seq.empty[String],
-          VectorIndex.centroidsRoot(r) -> Seq.empty[String],
-          VectorIndex.statsRoot(r) -> Seq.empty[String],
-          VectorIndex.pqCodebookRoot(r) -> Seq.empty[String])) ++
-        spanRoot.map(r => SpanIndex.spansRoot(r) -> Seq("smod")).toSeq,
-      keep = keep)
+      (curatedRoot +: LshIndex.roots(lshRoot)) ++ matchesRoot ++
+        vectorRoot.toSeq.flatMap(VectorIndex.roots) ++
+        spanRoot.toSeq.flatMap(SpanIndex.roots),
+      keep)
   }
 }

@@ -327,8 +327,7 @@ object Indexing {
     val root = VectorIndex.defaultRoot(baseRaw, seedK = 8, iters = 2)
     VectorIndex.buildIfAbsent(vecs(baseRaw), root, seedK = 8, iters = 2)
     VectorIndex.assignBatch(s, root, vecs(raw.filter(isBatch)), batchId = 0L)
-    graft.sources.Snapshots.compact(s,
-      VectorIndex.assignmentsRoot(root), Seq("bucket"))
+    graft.sources.Snapshots.compact(s, VectorIndex.assignmentsRoot(root))
     val queries = vecs(baseRaw).filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     VectorIndex.ivfTopKStored(s, root, queries, k = 3, nprobe = 2)
@@ -468,8 +467,8 @@ object Indexing {
     LshIndex.buildIfAbsent(corpus, root)
     LshIndex.absorbBatch(s, root, planted(Plants.Shift1, " near dup probe"),
       batchId = 0L)
-    graft.sources.Snapshots.compact(s, LshIndex.bandsRoot(root), Seq("bmod"))
-    graft.sources.Snapshots.compact(s, LshIndex.shinglesRoot(root), Seq("dmod"))
+    graft.sources.Snapshots.compact(s, LshIndex.bandsRoot(root))
+    graft.sources.Snapshots.compact(s, LshIndex.shinglesRoot(root))
     LshIndex.absorbBatch(s, root, planted(Plants.Shift2, " near dup probe again"),
       batchId = 1L)
   }
@@ -653,7 +652,7 @@ object Indexing {
     val base = LshIndex.defaultRoot(corpus) + "-week"
     val (curatedRoot, lshRoot) = (s"$base/curated", s"$base/lsh")
     if (Snapshots.latestVersion(curatedRoot).isEmpty)
-      Snapshots.commit(corpus, curatedRoot)
+      Snapshots.commit(corpus, curatedRoot, Seq("doc_id"))
     LshIndex.buildIfAbsent(corpus, lshRoot)
     for (d <- 0 until 7) {
       CurationJob.absorbDaily(weekBatch(corpus, d), curatedRoot, lshRoot,
@@ -689,7 +688,7 @@ object Indexing {
     val base = LshIndex.defaultRoot(corpus) + "-weekc"
     val (curatedRoot, lshRoot) = (s"$base/curated", s"$base/lsh")
     if (Snapshots.latestVersion(curatedRoot).isEmpty)
-      Snapshots.commit(corpus, curatedRoot)
+      Snapshots.commit(corpus, curatedRoot, Seq("doc_id"))
     LshIndex.buildIfAbsent(corpus, lshRoot)
     for (d <- 0 until 7) {
       val start = new java.util.concurrent.CountDownLatch(1)
@@ -915,7 +914,7 @@ object Indexing {
       Snapshots.landBatch(p, mroot, d.toLong)
       VectorIndex.encodeBatchPq(s, root, batch, batchId = d.toLong)
       VectorIndex.nightly(s, root)
-      Snapshots.maintain(s, Seq(mroot -> Seq.empty))
+      Snapshots.maintain(s, Seq(mroot))
     }
     val queries = base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v"))

@@ -83,14 +83,14 @@ object Lakehouse {
     val root = fpRoot(docs, "rollback")
     ensureHistory(root, finalVersion = 3L) {
       Snapshots.commit(day(0, 0), root)                                   // v0
-      val v1 = Snapshots.commitAppend(day(1, 1), root, Seq.empty, Some(1L))
+      val v1 = Snapshots.commitAppend(day(1, 1), root, batchId = Some(1L))
       Snapshots.commitAppend(day(2, -2, poison = true), root,
-        Seq.empty, Some(2L))                                              // poisoned
+        batchId = Some(2L))                                               // poisoned
       Snapshots.rollback(root, v1)                                        // repair
-      Snapshots.commitAppend(day(2, 2), root, Seq.empty, Some(2L))        // corrected
+      Snapshots.commitAppend(day(2, 2), root, batchId = Some(2L))        // corrected
       Snapshots.commitAppend(day(2, -2, poison = true), root,
-        Seq.empty, Some(2L))                                              // replay: no-op
-      Snapshots.commitAppend(day(3, 3), root, Seq.empty, Some(3L))
+        batchId = Some(2L))                                               // replay: no-op
+      Snapshots.commitAppend(day(3, 3), root, batchId = Some(3L))
     }
     Snapshots.read(s, root)
   }
@@ -137,7 +137,7 @@ object Lakehouse {
     val root = fpRoot(docs, "merge")
     ensureHistory(root, finalVersion = 3L) {
       Snapshots.commit(asLen(slice(0)), root)                               // v0
-      Snapshots.commitAppend(asLen(slice(1)), root, Seq.empty, Some(1L))    // v1
+      Snapshots.commitAppend(asLen(slice(1)), root, batchId = Some(1L))    // v1
       Snapshots.commitDelete(
         slice(0, 30).select(col("doc_id")), root, "doc_id", Some(2L))       // v2
       // one ATOMIC version: update %15==1 rows (len shifted by 1000 —
@@ -235,7 +235,7 @@ object Lakehouse {
         val q = ChangeFeed.follow(s, src, sink, fromV = 0L,
           tick = "250 milliseconds")
         try {
-          Snapshots.commitAppend(asLen(slice(1)), src, Seq.empty, Some(1L)) // v1
+          Snapshots.commitAppend(asLen(slice(1)), src, batchId = Some(1L)) // v1
           awaitPosition(sink, 1L)
           Snapshots.compact(s, src)                                       // v2: skipped
           Snapshots.commitDelete(
@@ -321,7 +321,7 @@ object Lakehouse {
         val q = ChangeFeed.followMirror(s, src, sink, mirror,
           keyCol = "doc_id", fromV = 0L, tick = "250 milliseconds")
         try {
-          Snapshots.commitAppend(asLen(slice(1)), src, Seq.empty, Some(1L)) // v1
+          Snapshots.commitAppend(asLen(slice(1)), src, batchId = Some(1L)) // v1
           awaitMirrorPos(mirror, 1L)
           Snapshots.compact(s, src)                                        // v2: skipped
           Snapshots.commitDelete(
@@ -332,8 +332,8 @@ object Lakehouse {
               .unionByName(asLen(slice(2, 15))
                 .select((col("doc_id") + 1000000L).as("doc_id"), col("len"))),
             src, "doc_id", batchId = Some(3L))                             // v4
-          Snapshots.commitAppend(asLen(slice(2, 6)), src, Seq.empty, Some(4L)) // v5
-          Snapshots.commitAppend(asLen(slice(5, 6)), src, Seq.empty, Some(5L)) // v6
+          Snapshots.commitAppend(asLen(slice(2, 6)), src, batchId = Some(4L)) // v5
+          Snapshots.commitAppend(asLen(slice(5, 6)), src, batchId = Some(5L)) // v6
           awaitMirrorPos(mirror, 6L)
         } finally q.stop()
       }
@@ -394,12 +394,12 @@ object Lakehouse {
         Seq(src, sink, mirror).foreach(Snapshots.wipe)
         Snapshots.commit(asLen(slice(0)), src)                             // v0
         Snapshots.commitBatch(Snapshots.readVersion(s, src, 0L), mirror, 0L)
-        Snapshots.commitAppend(asLen(slice(1)), src, Seq.empty, Some(1L))  // v1
+        Snapshots.commitAppend(asLen(slice(1)), src, batchId = Some(1L))  // v1
         ChangeFeed.catchUp(s, src, sink)
         ChangeFeed.mirrorCatchUp(s, sink, mirror, keyCol = "doc_id")
         // the follower pauses; the source keeps moving and retention
         // outruns it — v2/v3 are physically destroyed
-        Snapshots.commitAppend(asLen(slice(2)), src, Seq.empty, Some(2L))  // v2
+        Snapshots.commitAppend(asLen(slice(2)), src, batchId = Some(2L))  // v2
         Snapshots.commitDelete(slice(0, 8).select(col("doc_id")), src,
           "doc_id", Some(3L))                                              // v3
         Snapshots.compact(s, src)                                          // v4
@@ -410,7 +410,7 @@ object Lakehouse {
         require(refused, "expected the retention-gap refusal before reset")
         ChangeFeed.reset(s, src, sink, Some(mirror), keyCol = "doc_id")    // V = 4
         // resume: new history flows through the healed pair
-        Snapshots.commitAppend(asLen(slice(3)), src, Seq.empty, Some(4L))  // v5
+        Snapshots.commitAppend(asLen(slice(3)), src, batchId = Some(4L))  // v5
         Snapshots.commitMerge(
           asLen(slice(2, 8)).select(col("doc_id"), (col("len") + 1000L).as("len"))
             .unionByName(asLen(slice(6, 8))
@@ -483,9 +483,10 @@ object Lakehouse {
   /** #237 DOC LOOKUP on a curated-corpus-shaped chain
     * (`q_doc_lookup`) — the OPERATIONAL consumer of the stats
     * sidecars gated end-to-end: a base snapshot plus two delta
-    * appends (each range-laid on doc_id and committed with per-file
-    * doc_id stats — exactly what [[graft.pipelines.CurationJob
-    * .absorbDaily]] records on every curated append), then
+    * appends (each range-laid on doc_id, with the per-file doc_id
+    * stats the base commit declares — exactly what
+    * [[graft.pipelines.CurationJob.absorbDaily]] records on every
+    * curated append), then
     * [[graft.pipelines.CurationJob.lookupDocs]] fetches an id range
     * — since r13 a PLAIN filtered read whose pruning happens in the
     * planner ([[graft.sources.StatsFileIndex]]) — and must equal the
@@ -507,10 +508,10 @@ object Lakehouse {
         root, statsCols = Seq("doc_id"))                                  // v0
       Snapshots.commitAppend(
         laid(docs.filter(pmod(col("doc_id"), lit(4)) === 1), 4), root,
-        batchId = Some(1L), statsCols = Seq("doc_id"))                    // v1
+        batchId = Some(1L))                                               // v1
       Snapshots.commitAppend(
         laid(docs.filter(pmod(col("doc_id"), lit(4)) === 3), 4), root,
-        batchId = Some(2L), statsCols = Seq("doc_id"))                    // v2
+        batchId = Some(2L))                                               // v2
       ()
     }
     graft.pipelines.CurationJob.lookupDocs(s, root, 100L, 399L)

@@ -33,14 +33,21 @@ object VectorIndex {
 
   /** Bump when build semantics change: a [[defaultRoot]] from an older
     * layout can then never be silently reused. (2: build also commits
-    * the `stats` drift baseline.) */
-  val layoutVersion = 2
+    * the `stats` drift baseline; 3: manifests record the `bucket=`
+    * layout — an older root reads as unpartitioned and its next
+    * compaction would drop the dirs.) */
+  val layoutVersion = 3
 
   def centroidsRoot(root: String): String = s"$root/centroids"
   def assignmentsRoot(root: String): String = s"$root/assignments"
   def statsRoot(root: String): String = s"$root/stats"
   def pqCodebookRoot(root: String): String = s"$root/pq_codebook"
   def pqCodesRoot(root: String): String = s"$root/pq_codes"
+
+  /** Every artifact root of an index — what nightly maintenance
+    * compacts and vacuums. */
+  def roots(root: String): Seq[String] = Seq(assignmentsRoot(root),
+    pqCodesRoot(root), centroidsRoot(root), statsRoot(root), pqCodebookRoot(root))
 
   /** Deterministic index root for a corpus: keyed on an
     * order-independent content fingerprint of the vectors (so an
@@ -124,14 +131,7 @@ object VectorIndex {
     * end-to-end, `q_ann_ivf_compacted` the assignments chain). */
   def nightly(spark: SparkSession, root: String,
       keep: Int = 7): Snapshots.Maintenance =
-    Snapshots.maintain(spark,
-      Seq(
-        assignmentsRoot(root) -> Seq("bucket"),
-        pqCodesRoot(root) -> Seq.empty,
-        centroidsRoot(root) -> Seq.empty,
-        statsRoot(root) -> Seq.empty,
-        pqCodebookRoot(root) -> Seq.empty),
-      keep)
+    Snapshots.maintain(spark, roots(root), keep)
 
   // ---------------------------------------------------------------- IVF
 
@@ -202,7 +202,7 @@ object VectorIndex {
     val cents = Snapshots.read(spark, centroidsRoot(root))
     Snapshots.commitAppend(
       assignRowLocal(batch, cents).drop("ccos"),
-      assignmentsRoot(root), Seq("bucket"), Some(batchId))
+      assignmentsRoot(root), Some(batchId))
   }
 
   /** SEMANTIC NEAR-DUP PROBE + ABSORB over the stored index — the
@@ -266,8 +266,7 @@ object VectorIndex {
         round(Embeddings.cosine(col("a.v"), col("b.v")), 6).as("cos"))
       .filter(col("cos") >= tau)
     val out = vsCorpus.unionByName(within)
-    Snapshots.commitAppend(assigned, assignmentsRoot(root),
-      Seq("bucket"), Some(batchId))
+    Snapshots.commitAppend(assigned, assignmentsRoot(root), Some(batchId))
     out
   }
 
@@ -486,7 +485,7 @@ object VectorIndex {
       batchId: Long): Long = {
     val cb = Snapshots.read(spark, pqCodebookRoot(root))
     Snapshots.commitAppend(encodePq(subVectors(batch), cb),
-      pqCodesRoot(root), Seq.empty, Some(batchId))
+      pqCodesRoot(root), Some(batchId))
   }
 
   /** Idempotent [[buildPq]] (no-op when both artifacts exist). */

@@ -18,8 +18,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *                                       "ts":..,"cid":"..","batchId":..,
   *                                       "delta":true,"tombstoneKey":"..",
   *                                       "mergeKey":"..","keyed":true,
-  *                                       "compacted":true,"maxBatchId":..}
-  *                                      (absent options and false flags omitted)
+  *                                       "compacted":true,"maxBatchId":..,
+  *                                       "partitionCols":[..],"statsCols":[..]}
+  *                                      (absent options, false flags and empty
+  *                                       layouts omitted)
   *   <root>/manifests/stats-vN.json     optional per-file stats ([[FileStats]])
   *   <root>/_latest                     atomic pointer file: "N"
   * }}}
@@ -151,10 +153,9 @@ object Snapshots {
     * full snapshot, later ones idempotent delta appends — so a crash
     * between an index append and this landing retries into a no-op on
     * the index side and a replay-stable frame here. */
-  def landBatch(df: DataFrame, root: String, batchId: Long,
-      statsCols: Seq[String] = Seq.empty): Unit = {
-    if (latestVersion(root).isEmpty) commitBatch(df, root, batchId, statsCols)
-    else commitAppend(df, root, batchId = Some(batchId), statsCols = statsCols)
+  def landBatch(df: DataFrame, root: String, batchId: Long): Unit = {
+    if (latestVersion(root).isEmpty) commitBatch(df, root, batchId)
+    else commitAppend(df, root, batchId = Some(batchId))
     ()
   }
 
@@ -215,24 +216,41 @@ object Snapshots {
     *    change-feed follower skips it, where a fresh [[commit]] (a real
     *    content replace) is a feed error;
     *  - `maxBatchId`: the running max of monotone batch ids, carried
-    *    through every commit — the replay watermark ([[maxBatchIdOf]]).
-    * Absent options and false flags are omitted on disk. Manifests
-    * from before `ts`, `cid`, `keyed` or `maxBatchId` existed parse
-    * with them absent; [[readAsOf]] treats a missing `ts` as
-    * infinitely old. */
+    *    through every commit — the replay watermark ([[maxBatchIdOf]]);
+    *  - `partitionCols` / `statsCols`: the root's LAYOUT — hive
+    *    partition dirs and per-file stats sidecar columns. Full commits
+    *    ([[commit]], [[commitPartitioned]], [[commitBatch]],
+    *    [[commitKeyed]]) declare it; every other commit inherits it
+    *    from the latest manifest ([[laidOutAfter]]), so appends,
+    *    merges and compactions keep the dirs and sidecars later reads
+    *    prune on without any caller restating them.
+    * Absent options, false flags and empty layouts are omitted on
+    * disk. Manifests from before `ts`, `cid`, `keyed`, `maxBatchId` or
+    * the layout existed parse with them absent (an absent layout is
+    * the empty one); [[readAsOf]] treats a missing `ts` as infinitely
+    * old. */
   final case class Manifest(
       version: Long = -1L, rows: Long = 0L, parent: Long = -1L,
       ts: Option[Long] = None, cid: Option[String] = None,
       batchId: Option[Long] = None, delta: Boolean = false,
       tombstoneKey: Option[String] = None, mergeKey: Option[String] = None,
       keyed: Boolean = false, compacted: Boolean = false,
-      maxBatchId: Option[Long] = None) {
+      maxBatchId: Option[Long] = None,
+      partitionCols: Seq[String] = Seq.empty, statsCols: Seq[String] = Seq.empty) {
 
     /** Comparable identity for ABA guards: the commit id, else the
       * legacy timestamp (pre-cid manifests) — two reads agree iff they
       * saw the SAME commit of this version. */
     private[Snapshots] def identity: String =
       cid.orElse(ts.map(t => s"ts:$t")).getOrElse("absent")
+
+    /** This template laid out after `prev`, the latest manifest: a
+      * delta or compacted commit INHERITS the root's layout, a full
+      * commit keeps the one it declares. */
+    private[Snapshots] def laidOutAfter(prev: Option[Manifest]): Manifest =
+      if (!delta && !compacted) this
+      else copy(partitionCols = prev.toSeq.flatMap(_.partitionCols),
+        statsCols = prev.toSeq.flatMap(_.statsCols))
 
     private[Snapshots] def toJson: String = {
       val n = json.createObjectNode()
@@ -248,6 +266,10 @@ object Snapshots {
       if (keyed) n.put("keyed", true)
       if (compacted) n.put("compacted", true)
       maxBatchId.foreach(n.put("maxBatchId", _))
+      def strs(f: String, xs: Seq[String]): Unit =
+        if (xs.nonEmpty) { val a = n.putArray(f); xs.foreach(x => a.add(x)) }
+      strs("partitionCols", partitionCols)
+      strs("statsCols", statsCols)
       json.writeValueAsString(n)
     }
   }
@@ -266,10 +288,12 @@ object Snapshots {
       def long(f: String) = Option(n.get(f)).map(_.asLong)
       def str(f: String) = Option(n.get(f)).map(_.asText)
       def flag(f: String) = Option(n.get(f)).exists(_.asBoolean)
+      def strs(f: String) = n.path(f).elements().asScala.map(_.asText).toSeq
       Some(Manifest(n.path("version").asLong(v), n.path("rows").asLong,
         n.path("parent").asLong(v - 1), long("ts"), str("cid"), long("batchId"),
         flag("delta"), str("tombstoneKey"), str("mergeKey"), flag("keyed"),
-        flag("compacted"), long("maxBatchId")))
+        flag("compacted"), long("maxBatchId"), strs("partitionCols"),
+        strs("statsCols")))
     }
   }
 
@@ -302,9 +326,11 @@ object Snapshots {
     * second data pass — which [[readPruned]] consumes for file-level
     * data skipping. Pair with a layout that CLUSTERS those columns
     * (Z-order / range sort before the commit) or the min/max spans
-    * cover everything and nothing prunes. */
+    * cover everything and nothing prunes. The columns become the
+    * root's declared layout: later appends, merges and compactions
+    * record the same sidecar (see [[Manifest]]). */
   def commit(df: DataFrame, root: String, statsCols: Seq[String] = Seq.empty): Long =
-    commitInternal(df, root, Manifest(), statsCols = statsCols).version
+    commitInternal(df, root, Manifest(statsCols = statsCols)).version
 
   /** [[commit]] with hive-style partition directories on
     * `partitionCols` inside the snapshot's data dir — a reader
@@ -313,10 +339,14 @@ object Snapshots {
     * per-query cost probe-bucket-sized instead of corpus-sized.
     * `statsCols` adds file-level skipping WITHIN the surviving
     * directories (see [[commit]]) — partition pruning for the coarse
-    * key, stats pruning for the fine one. */
+    * key, stats pruning for the fine one. Both lists are recorded in
+    * the manifest as the root's layout: every later [[commitAppend]],
+    * [[commitMerge]] and [[compact]] writes its files the same way
+    * with no layout argument of its own. */
   def commitPartitioned(df: DataFrame, root: String, partitionCols: Seq[String],
       statsCols: Seq[String] = Seq.empty): Long =
-    commitInternal(df, root, Manifest(), partitionCols, statsCols = statsCols).version
+    commitInternal(df, root,
+      Manifest(partitionCols = partitionCols, statsCols = statsCols)).version
 
   /** IDEMPOTENT commit keyed by an external batch id (a Structured
     * Streaming micro-batch id): replaying a batch id ≤ the last
@@ -327,7 +357,7 @@ object Snapshots {
     * point). Returns the committed (or already-current) version. */
   def commitBatch(df: DataFrame, root: String, batchId: Long,
       statsCols: Seq[String] = Seq.empty): Long =
-    commitGuarded(df, root, Manifest(batchId = Some(batchId)), statsCols = statsCols)
+    commitGuarded(df, root, Manifest(batchId = Some(batchId), statsCols = statsCols))
 
   /** APPEND (delta) commit: the new version's data dir holds ONLY
     * `delta`'s rows; its manifest records `delta:true` and readers
@@ -337,16 +367,16 @@ object Snapshots {
     * never rewritten — while every version stays a time-travel point
     * and rollback/readers-of-N semantics are unchanged. Chains are
     * kept short by [[compact]] (a periodic full re-commit); `batchId`
-    * gives the same idempotent-replay contract as [[commitBatch]]. */
+    * gives the same idempotent-replay contract as [[commitBatch]]. The
+    * delta is written in the root's declared layout — the partition
+    * dirs and stats sidecar of the last full commit ([[Manifest]]). */
   def commitAppend(delta: DataFrame, root: String,
-      partitionCols: Seq[String] = Seq.empty,
       batchId: Option[Long] = None,
-      evolveSchema: Boolean = false,
-      statsCols: Seq[String] = Seq.empty): Long = {
+      evolveSchema: Boolean = false): Long = {
     require(latestVersion(root).nonEmpty,
       s"commitAppend needs an existing full snapshot under $root")
     commitGuarded(delta, root, Manifest(batchId = batchId, delta = true),
-      partitionCols, Some(evolveSchema), statsCols)
+      Some(evolveSchema))
   }
 
   /** The one REPLAY-GUARDED commit path behind [[commitBatch]],
@@ -365,18 +395,20 @@ object Snapshots {
     * land EXACTLY once (the loser discards its stage), and a racing
     * evolution commit landing between the pre-check and the claim
     * cannot let a mismatched column set commit without evolveSchema
-    * (a thrown guard discards the stage and propagates loudly). */
+    * (a thrown guard discards the stage and propagates loudly). The
+    * latest manifest read for the fast-path check also lays the
+    * stage out: an inheriting template takes the root's layout from
+    * it ([[Manifest.laidOutAfter]]). */
   private def commitGuarded(df: DataFrame, root: String, template: Manifest,
-      partitionCols: Seq[String] = Seq.empty, evolveSchema: Option[Boolean] = None,
-      statsCols: Seq[String] = Seq.empty): Long = {
-    def replayOf(latest: Option[Long]): Option[Long] = latest.filter(v =>
-      template.batchId.exists(b => maxBatchIdOf(root, v).exists(_ >= b)))
+      evolveSchema: Option[Boolean] = None): Long = {
+    def replayOf(latest: Option[Manifest]): Option[Long] = latest.filter(m =>
+      template.batchId.exists(b => watermarkOf(root, m).exists(_ >= b))).map(_.version)
     def validate(): Unit = evolveSchema.foreach(validateAppendSchema(df, root, _))
-    replayOf(latestVersion(root)).getOrElse {
+    val latest = latestManifest(root)
+    replayOf(latest).getOrElse {
       validate()
-      val c = commitInternal(df, root, template, partitionCols,
-        guard = () => replayOf(latestVersion(root)).isEmpty && { validate(); true },
-        statsCols = statsCols)
+      val c = commitInternal(df, root, template.laidOutAfter(latest),
+        guard = prev => replayOf(prev).isEmpty && { validate(); true })
       if (c.committed && evolveSchema.nonEmpty) carrySchemaCache(root, df, c.version)
       c.version
     }
@@ -436,7 +468,7 @@ object Snapshots {
     }
     val latest = latestVersion(root).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
-    val cid = commitIdentity(root, latest)
+    val cid = manifestOf(root, latest).fold("absent")(_.identity)
     val current = schemaCache.get(root) match {
       case (v, c, s) if v == latest && c == cid => s
       case _ =>
@@ -483,8 +515,10 @@ object Snapshots {
     * the delete itself; readers pay one broadcast anti-join per
     * tombstone still in the chain, which nightly compaction folds
     * away. Idempotent per `batchId` (same watermark contract as
-    * [[commitAppend]]). Returns the committed (or already-current)
-    * version. */
+    * [[commitAppend]]). The key frame is written plain — no partition
+    * dirs, no sidecar — while the manifest carries the root's layout
+    * forward for the commits after it. Returns the committed (or
+    * already-current) version. */
   def commitDelete(keys: DataFrame, root: String, keyCol: String,
       batchId: Option[Long] = None): Long = {
     require(latestVersion(root).nonEmpty,
@@ -506,10 +540,11 @@ object Snapshots {
     * per merge still in the chain, which nightly compaction folds
     * away. Version-ordered like every commit (a later delete can
     * remove a merged key; a later merge re-updates it), idempotent per
-    * `batchId`, schema-checked like [[commitAppend]]. Returns the
-    * committed (or already-current) version. */
+    * `batchId`, schema-checked like [[commitAppend]], and written in
+    * the root's declared layout like it (partition dirs and stats
+    * sidecar inherited from the manifest). Returns the committed (or
+    * already-current) version. */
   def commitMerge(updates: DataFrame, root: String, keyCol: String,
-      partitionCols: Seq[String] = Seq.empty,
       batchId: Option[Long] = None,
       evolveSchema: Boolean = false): Long = {
     require(latestVersion(root).nonEmpty,
@@ -518,7 +553,7 @@ object Snapshots {
       s"merge key $keyCol missing from the update frame")
     commitGuarded(updates, root,
       Manifest(batchId = batchId, delta = true, mergeKey = Some(keyCol)),
-      partitionCols, Some(evolveSchema))
+      Some(evolveSchema))
   }
 
   /** CHANGE FEED: every row-level change committed AFTER `fromV` up to
@@ -596,10 +631,10 @@ object Snapshots {
     * is then still a delta — rather than livelocking full-table
     * rewrites; the next maintenance run catches up. Callers needing a
     * guaranteed-full result must check `isDelta` on the returned
-    * version. */
-  def compact(spark: SparkSession, root: String,
-      partitionCols: Seq[String] = Seq.empty,
-      statsCols: Seq[String] = Seq.empty): Long = {
+    * version. The rewrite keeps the root's declared layout (partition
+    * dirs and stats sidecar, from the manifest): a compacted root
+    * prunes exactly as its chain did. */
+  def compact(spark: SparkSession, root: String): Long = {
     // bounded retries: every refused attempt means a writer advanced
     // the root mid-rewrite, and each retry re-stages a now-LONGER
     // chain — under a sustained append stream an unbounded loop would
@@ -635,16 +670,14 @@ object Snapshots {
       // timestamp-derived monotone ids like epoch millis survive
       // compaction); the chain scan inside maxBatchIdOf serves only
       // manifests that carry no field (see there)
-      val maxBatch = maxBatchIdOf(root, pinned)
+      val maxBatch = watermarkOf(root, pinnedManifest.get)
       // compacted = true: marks this full rewrite as an INVISIBLE one
       // (same logical content as the chain it replaces), which is what
       // lets a change-feed follower skip it instead of erroring — a
       // fresh commit() has no such marker and remains a feed error
       val c = commitInternal(readVersion(spark, root, pinned), root,
-        Manifest(batchId = maxBatch, compacted = true), partitionCols,
-        guard = () => latestVersion(root).contains(pinned) &&
-          commitIdentity(root, pinned) == pinnedId,
-        statsCols = statsCols)
+        Manifest(batchId = maxBatch, compacted = true).laidOutAfter(pinnedManifest),
+        guard = prev => prev.exists(p => p.version == pinned && p.identity == pinnedId))
       if (c.committed) return c.version
     }
     latestVersion(root).get // contended past the retry cap: defer
@@ -670,8 +703,9 @@ object Snapshots {
       // runs of one fingerprint commit exactly one version (the loser
       // reports the winner's version with committed = false).
       case None =>
-        val v = commitInternal(df, root, Manifest(batchId = Some(key), keyed = true),
-          partitionCols, guard = () => existing.isEmpty)
+        val v = commitInternal(df, root,
+          Manifest(batchId = Some(key), keyed = true, partitionCols = partitionCols),
+          guard = _ => existing.isEmpty)
         if (v.committed) (v.version, true) else (existing.get, false)
     }
   }
@@ -705,24 +739,36 @@ object Snapshots {
     * by marker, pre-marker keyed versions by [[MaxPlausibleMonotoneId]]
     * (the pre-field semantics, as `compact` carried it). */
   def maxBatchIdOf(root: String, v: Long): Option[Long] =
-    manifestOf(root, v).flatMap(_.maxBatchId).orElse(
-      chain(root, v).filterNot(_.keyed).flatMap(_.batchId)
+    manifestOf(root, v).flatMap(watermarkOf(root, _))
+
+  /** [[maxBatchIdOf]] over an already-parsed manifest. */
+  private def watermarkOf(root: String, m: Manifest): Option[Long] =
+    m.maxBatchId.orElse(
+      chain(root, m.version).filterNot(_.keyed).flatMap(_.batchId)
         .filter(b => math.abs(b) <= MaxPlausibleMonotoneId)
         .reduceOption(_ max _))
+
+  /** The manifest `_latest` points at, if any. */
+  private def latestManifest(root: String): Option[Manifest] =
+    latestVersion(root).flatMap(manifestOf(root, _))
 
   /** Result of [[commitInternal]]: the version the caller should use,
     * and whether THIS call wrote it (false = the under-lock guard
     * found the work already done by a racing writer). */
   private final case class Committed(version: Long, committed: Boolean)
 
-  /** Stage `df` and commit it under a manifest built from `template`
-    * (its batch id and flags; version, rows, parent, ts, cid and
-    * maxBatchId are filled in at commit). `guard` is re-checked under
-    * the commit lock: false discards the stage and reports the current
+  /** Stage `df` in `template`'s layout and commit it under a manifest
+    * built from `template` (its batch id, flags and layout; version,
+    * rows, parent, ts, cid and maxBatchId are filled in at commit). A
+    * tombstone's key frame is staged plain whatever the layout.
+    * `guard` is re-checked under the commit lock against the latest
+    * manifest: false discards the stage and reports the current
     * latest with `committed = false`. */
   private def commitInternal(df: DataFrame, root: String, template: Manifest,
-      partitionCols: Seq[String] = Seq.empty, guard: () => Boolean = () => true,
-      statsCols: Seq[String] = Seq.empty): Committed = {
+      guard: Option[Manifest] => Boolean = _ => true): Committed = {
+    val (partitionCols, statsCols) =
+      if (template.tombstoneKey.nonEmpty) (Nil, Nil)
+      else (template.partitionCols, template.statsCols)
     // 1. STAGE the data (distributed, lock-free — concurrent writers
     // each write a private stage dir). Hive-partitioned commits
     // CLUSTER BY the partition key first: without it every shuffle
@@ -778,8 +824,7 @@ object Snapshots {
       // per commit (every absorb runs 2-3 commits; a week gate ~30)
       val rows = stats.map(_.map(_.rows).sum)
         .getOrElse(FileStats.rowCount(df.sparkSession, Paths.get(stage)))
-      commitStaged(root, stage, template.copy(rows = rows), guard, hb,
-        stats, statsCols)
+      commitStaged(root, stage, template.copy(rows = rows), guard, hb, stats)
     } finally hb.stop()
   }
 
@@ -788,9 +833,8 @@ object Snapshots {
     * file ops only — the expensive distributed write is already
     * done). */
   private def commitStaged(root: String, stage: String, template: Manifest,
-      guard: () => Boolean, hb: StageHeartbeat,
-      stats: Option[Seq[FileStats.FileStat]],
-      statsCols: Seq[String]): Committed = {
+      guard: Option[Manifest] => Boolean, hb: StageHeartbeat,
+      stats: Option[Seq[FileStats.FileStat]]): Committed = {
     withCommitLock(root) {
       // the stage is ours to mutate from here — STOP the heartbeat
       // before any delete/move on it: stop() removes the file and
@@ -806,8 +850,19 @@ object Snapshots {
       // (the under-lock schema recheck) also discards the stage, then
       // propagates: the caller must see the contract violation loudly,
       // and the stage must not linger until the abandonment sweep.
+      val prev = latestManifest(root)
+      val m0 = template.laidOutAfter(prev)
       val pass =
-        try guard()
+        try guard(prev) && {
+          // the stage was laid out from a manifest read BEFORE the lock;
+          // a full commit re-declaring the layout in between would leave
+          // this commit's files shaped unlike its manifest says
+          if (template.tombstoneKey.isEmpty &&
+              (m0.partitionCols, m0.statsCols) != (template.partitionCols, template.statsCols))
+            throw new IllegalStateException(
+              s"the layout of $root changed while this commit staged")
+          true
+        }
         catch {
           case e: Throwable =>
             deleteRecursively(Paths.get(stage))
@@ -845,8 +900,8 @@ object Snapshots {
         // running max of monotone batch ids, carried through EVERY commit
         // (keyed fingerprints excluded — see commitKeyed); read under the
         // lock, so an interleaved writer's batch id is never missed
-        val prevMax = latestVersion(root).flatMap(maxBatchIdOf(root, _))
-        val m = template.copy(version = next, parent = next - 1,
+        val prevMax = prev.flatMap(watermarkOf(root, _))
+        val m = m0.copy(version = next, parent = next - 1,
           // written under the lock, so commit times are non-decreasing
           // in version order on any one host's clock
           ts = Some(System.currentTimeMillis()),
@@ -857,7 +912,7 @@ object Snapshots {
         // manifest: a reader that sees the pointer finds the sidecar)
         stats.foreach { fs =>
           Files.write(statsPath(root, next),
-            FileStats.toJson(next, statsCols, fs)
+            FileStats.toJson(next, m.statsCols, fs)
               .getBytes(StandardCharsets.UTF_8)); ()
         }
         Files.write(manifest(root, next), m.toJson.getBytes(StandardCharsets.UTF_8))
@@ -1037,11 +1092,6 @@ object Snapshots {
       .filter(FileStats.residual(ranges))
   }
 
-  /** [[Manifest.identity]] of version `v`, "absent" when it has no
-    * manifest. */
-  private def commitIdentity(root: String, v: Long): String =
-    manifestOf(root, v).fold("absent")(_.identity)
-
   /** TIMESTAMP time travel — "the table as of last midnight": resolve
     * the newest version whose commit time is ≤ `tsMs` and read it.
     * The version-number API ([[readVersion]]) is the precise form;
@@ -1087,18 +1137,18 @@ object Snapshots {
 
   /** NIGHTLY CHAIN MAINTENANCE over a set of snapshot roots — the
     * shared machinery behind [[graft.pipelines.CurationJob.nightly]]
-    * and [[graft.similarity.VectorIndex.nightly]]: for each
-    * (root, partitionCols) whose latest version is a delta, [[compact]]
-    * the chain back to ONE full snapshot (re-running is free — a full
-    * latest is a no-op), then [[vacuum]] history beyond `keep`
-    * versions. Roots with no committed version are skipped, so a
-    * caller can list every chain its deployment MIGHT grow. The
-    * replay watermark survives throughout ([[compact]] carries the
-    * chain's maxBatchId). Cost: one distributed rewrite per chain
-    * that actually has deltas, metadata otherwise. */
-  def maintain(spark: SparkSession, roots: Seq[(String, Seq[String])],
-      keep: Int = 7,
-      statsCols: Map[String, Seq[String]] = Map.empty): Maintenance = {
+    * and [[graft.similarity.VectorIndex.nightly]]: for each root
+    * whose latest version is a delta, [[compact]] the chain back to
+    * ONE full snapshot in the root's declared layout (re-running is
+    * free — a full latest is a no-op), then [[vacuum]] history beyond
+    * `keep` versions. Roots with no committed version are skipped, so
+    * a caller can list every chain its deployment MIGHT grow. The
+    * replay watermark, partition dirs and stats sidecars survive
+    * throughout ([[compact]] carries the chain's maxBatchId and
+    * layout). Cost: one distributed rewrite per chain that actually
+    * has deltas, metadata otherwise. */
+  def maintain(spark: SparkSession, roots: Seq[String],
+      keep: Int = 7): Maintenance = {
     // The roots are INDEPENDENT tables (each compact/vacuum touches one
     // root, under that root's own commit lock), and each compact is one
     // distributed rewrite whose tail leaves most cores idle — so the
@@ -1108,26 +1158,22 @@ object Snapshots {
     // ordering (compact, then vacuum) are unchanged; results keep the
     // caller's root order. 3 in flight is the guide's "enough to fill
     // the tail" number.
-    def maintainOne(root: String, parts: Seq[String]): (Option[Long], Seq[Long]) = {
+    def maintainOne(root: String): (Option[Long], Seq[Long]) = {
       val did = latestVersion(root)
         .filter(v => isDelta(root, v))
-        // compaction re-records the per-file stats sidecar for roots
-        // that declare stats columns — without this, the nightly
-        // rewrite would silently strip the chain's data-skipping
-        // metadata and every later readPruned would scan whole
-        .map(_ => compact(spark, root, parts, statsCols.getOrElse(root, Seq.empty)))
+        .map(_ => compact(spark, root))
       (did, vacuum(root, keep))
     }
     val done: Seq[(String, (Option[Long], Seq[Long]))] =
       if (roots.size <= 1)
-        roots.map { case (r, p) => r -> maintainOne(r, p) }
+        roots.map(r => r -> maintainOne(r))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(3, roots.size))
         try {
-          val futs = roots.map { case (r, p) =>
+          val futs = roots.map { r =>
             r -> pool.submit(new java.util.concurrent.Callable[(Option[Long], Seq[Long])] {
-              def call(): (Option[Long], Seq[Long]) = maintainOne(r, p)
+              def call(): (Option[Long], Seq[Long]) = maintainOne(r)
             })
           }
           futs.map { case (r, f) =>

@@ -47,8 +47,9 @@ import graft.sources.Snapshots
   * metadata reads; each landing reads ONLY the changed version's
   * delta dir (never the table), and the sink chain is a normal
   * snapshot chain — compact/vacuum it with [[Snapshots.maintain]]
-  * like any other. At 100 TB the feed's cost tracks the CHANGE RATE,
-  * not the table size.
+  * like any other (the rewrite keeps the `_commit_version` sidecar
+  * the bootstrap landing declared). At 100 TB the feed's cost tracks
+  * the CHANGE RATE, not the table size.
   */
 object ChangeFeed {
 
@@ -106,19 +107,19 @@ object ChangeFeed {
         // (the sink's other columns read as null — changesOf's union
         // semantics), and a schema-evolved source widens the sink the
         // same way. Type changes still fail loudly, like every append.
-        // EVERY landing — the bootstrap included — records a
-        // `_commit_version` stats sidecar: the column is constant per
-        // landed file, so the mirror's watermark filter prunes every
-        // already-applied feed FILE at the manifest level
-        // ([[Snapshots.readPruned]]) — a long-lived feed's catch-up
-        // reads O(pending versions' files), not the whole change
-        // table, bootstrap-heavy chains included
+        // The bootstrap landing declares a `_commit_version` stats
+        // sidecar, which every later landing and compaction inherits:
+        // the column is constant per landed file, so the mirror's
+        // watermark filter prunes every already-applied feed FILE at
+        // the manifest level ([[Snapshots.readPruned]]) — a long-lived
+        // feed's catch-up reads O(pending versions' files), not the
+        // whole change table, bootstrap-heavy chains included
         if (Snapshots.latestVersion(sinkRoot).isEmpty)
           Snapshots.commitBatch(changes, sinkRoot, v,
             statsCols = Seq("_commit_version"))
         else
           Snapshots.commitAppend(changes, sinkRoot, batchId = Some(v),
-            evolveSchema = true, statsCols = Seq("_commit_version"))
+            evolveSchema = true)
         Some(v)
       }
     }

@@ -111,15 +111,13 @@ object DocsStream {
     * @param docs streaming (doc_id, text, `tsCol`) frame */
   def probeNearDups(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       root: String, tsCol: String, watermark: String = "1 hour"): DataFrame = {
-    import graft.dedup.{LshIndex, TextDedup}
-    val sa = array_distinct(transform(
-      graft.functions.TextAnalysis.shinglesOfText(col("text")),
-      s => xxhash64(s)))
-    val bb = TextDedup.bandKeys(
-      TextDedup.minhashSignatures(
-        docs.withWatermark(tsCol, watermark).withColumn("sa", sa),
-        "doc_id", "text", carry = Seq("sa", tsCol)),
-      "doc_id", carry = Seq("sa", tsCol))
+    import graft.dedup.LshIndex
+    // banded like the stored index (LshIndex.bandsFor reads the root's
+    // rowsPerBand — a stream banded differently would match nothing)
+    val bb = LshIndex.bandsFor(root,
+      docs.withWatermark(tsCol, watermark)
+        .withColumn("sa", LshIndex.shingleSet(col("text"))),
+      carry = Seq("sa", tsCol))
     val storedBands = graft.sources.Snapshots
       .read(spark, LshIndex.bandsRoot(root))
       .select(col("doc_id").as("match_id"), col("band"), col("bucket"))
@@ -173,16 +171,12 @@ object DocsStream {
   def probeSpans(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       root: String): DataFrame = {
     import graft.dedup.SpanIndex
-    val toks = split(col("text"), " ")
-    val nSpans = ceil(size(toks).cast("double") / SpanIndex.W).cast("int")
-    val spans = transform(sequence(lit(0), nSpans - 1),
-      i => md5(array_join(slice(toks, i * SpanIndex.W + 1, lit(SpanIndex.W)), " ")))
     val storedH = graft.sources.Snapshots
       .read(spark, SpanIndex.spansRoot(root))
       .select(col("h")).distinct()
       .withColumn("__stored", lit(1))
     docs
-      .withColumn("__spans", spans)
+      .withColumn("__spans", SpanIndex.spanHashes(col("text")))
       .select(col("doc_id"), col("__spans"),
         posexplode(col("__spans")).as(Seq("idx", "h")))
       .withColumn("__within",

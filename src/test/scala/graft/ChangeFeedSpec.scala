@@ -24,7 +24,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     val b = tmpBase()
     val (src, sink) = (s"$b/src", s"$b/sink")
     Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), src)   // v0
-    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), src, Seq.empty, Some(1L)) // v1
+    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), src, batchId = Some(1L)) // v1
     Snapshots.commitDelete(Seq(1L).toDF("id"), src, "id", Some(2L))    // v2
     assert(ChangeFeed.catchUp(spark, src, sink) == Seq(1L, 2L))
     assert(ChangeFeed.position(sink).contains(2L))
@@ -47,12 +47,12 @@ class ChangeFeedSpec extends AnyFunSuite {
     val b = tmpBase()
     val (src, sink) = (s"$b/src", s"$b/sink")
     Snapshots.commit(Seq(1L).toDF("id"), src)                       // v0
-    Snapshots.commitAppend(Seq(2L).toDF("id"), src, Seq.empty, Some(1L)) // v1
+    Snapshots.commitAppend(Seq(2L).toDF("id"), src, batchId = Some(1L)) // v1
     assert(ChangeFeed.catchUp(spark, src, sink) == Seq(1L))
     Snapshots.compact(spark, src)                                   // v2 compacted
     // the compaction is skipped, the feed keeps flowing
     assert(ChangeFeed.catchUp(spark, src, sink).isEmpty)
-    Snapshots.commitAppend(Seq(3L).toDF("id"), src, Seq.empty, Some(2L)) // v3
+    Snapshots.commitAppend(Seq(3L).toDF("id"), src, batchId = Some(2L)) // v3
     assert(ChangeFeed.catchUp(spark, src, sink) == Seq(3L))
     assert(Snapshots.read(spark, sink).count() == 2) // v1 + v3 rows only
     // a REAL content replace has no row-level representation: loud stop
@@ -67,12 +67,12 @@ class ChangeFeedSpec extends AnyFunSuite {
     val b = tmpBase()
     val (src, sink) = (s"$b/src", s"$b/sink")
     Snapshots.commit(Seq(1L).toDF("id"), src)                            // v0
-    Snapshots.commitAppend(Seq(2L).toDF("id"), src, Seq.empty, Some(1L)) // v1
+    Snapshots.commitAppend(Seq(2L).toDF("id"), src, batchId = Some(1L)) // v1
     assert(ChangeFeed.catchUp(spark, src, sink) == Seq(1L))              // wm = 1
     // the follower pauses; the source keeps moving and maintenance
     // with aggressive retention drops the deltas the follower missed
-    Snapshots.commitAppend(Seq(3L).toDF("id"), src, Seq.empty, Some(2L)) // v2
-    Snapshots.commitAppend(Seq(4L).toDF("id"), src, Seq.empty, Some(3L)) // v3
+    Snapshots.commitAppend(Seq(3L).toDF("id"), src, batchId = Some(2L)) // v2
+    Snapshots.commitAppend(Seq(4L).toDF("id"), src, batchId = Some(3L)) // v3
     Snapshots.compact(spark, src)                                        // v4
     Snapshots.vacuum(src, keep = 0)                                      // v0-v3 gone
     assert(Snapshots.versions(src) == Seq(4L))
@@ -91,12 +91,12 @@ class ChangeFeedSpec extends AnyFunSuite {
     val b = tmpBase()
     val (src, sink, mirror) = (s"$b/src", s"$b/sink", s"$b/mirror")
     Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), src)     // v0
-    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), src, Seq.empty, Some(1L)) // v1
+    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), src, batchId = Some(1L)) // v1
     ChangeFeed.catchUp(spark, src, sink)                                 // wm = 1
     Snapshots.commitBatch(Snapshots.readVersion(spark, src, 0L), mirror, 0L)
     ChangeFeed.mirrorCatchUp(spark, sink, mirror, "id")                  // replica @ v1
     // follower pauses; source moves on; retention destroys the gap
-    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "v"), src, Seq.empty, Some(2L)) // v2
+    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "v"), src, batchId = Some(2L)) // v2
     Snapshots.commitDelete(Seq(1L).toDF("id"), src, "id", Some(3L))      // v3
     Snapshots.compact(spark, src)                                        // v4
     Snapshots.vacuum(src, keep = 0)                                      // v0-v3 gone
@@ -116,7 +116,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(Snapshots.read(spark, sink).count() == 0)
     // resume: new history lands and applies exactly-once through the
     // healed pair — insert AND delete paths
-    Snapshots.commitAppend(Seq((5L, "e")).toDF("id", "v"), src, Seq.empty, Some(4L)) // v5
+    Snapshots.commitAppend(Seq((5L, "e")).toDF("id", "v"), src, batchId = Some(4L)) // v5
     assert(ChangeFeed.catchUp(spark, src, sink) == Seq(5L))
     assert(ChangeFeed.mirrorCatchUp(spark, sink, mirror, "id") == Seq(5L))
     Snapshots.commitDelete(Seq(2L).toDF("id"), src, "id", Some(5L))      // v6
@@ -133,8 +133,8 @@ class ChangeFeedSpec extends AnyFunSuite {
     val b = tmpBase()
     val (src, sink, mirror) = (s"$b/src", s"$b/sink", s"$b/mirror")
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), src)                // v0
-    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), src, Seq.empty, Some(1L))
-    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), src, Seq.empty, Some(2L))
+    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), src, batchId = Some(1L))
+    Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), src, batchId = Some(2L))
     ChangeFeed.catchUp(spark, src, sink)                                 // wm = 2
     Snapshots.commitBatch(Snapshots.readVersion(spark, src, 0L), mirror, 0L)
     assert(ChangeFeed.mirrorCatchUp(spark, sink, mirror, "id") == Seq(1L, 2L))
@@ -151,7 +151,7 @@ class ChangeFeedSpec extends AnyFunSuite {
       == before, "a lagging feed changed the replica")
     // the feed recovers (re-lands v2, lands v3) — the mirror resumes
     // from its watermark exactly once and matches the source
-    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "v"), src, Seq.empty, Some(3L))
+    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "v"), src, batchId = Some(3L))
     Snapshots.rollback(sink, 1L) // undo the test's artificial regress
     ChangeFeed.catchUp(spark, src, sink)
     assert(ChangeFeed.mirrorCatchUp(spark, sink, mirror, "id") == Seq(3L))
@@ -173,14 +173,14 @@ class ChangeFeedSpec extends AnyFunSuite {
     }
     val q1 = ChangeFeed.follow(spark, src, sink, tick = "100 milliseconds")
     try {
-      Snapshots.commitAppend(Seq((2L, 20L)).toDF("id", "x"), src, Seq.empty, Some(1L))
+      Snapshots.commitAppend(Seq((2L, 20L)).toDF("id", "x"), src, batchId = Some(1L))
       await(1L)
     } finally q1.stop()
     // restart with NO checkpoint (a fresh temp one): the sink
     // watermark alone must carry exactly-once across the restart
     val q2 = ChangeFeed.follow(spark, src, sink, tick = "100 milliseconds")
     try {
-      Snapshots.commitAppend(Seq((3L, 30L)).toDF("id", "x"), src, Seq.empty, Some(2L))
+      Snapshots.commitAppend(Seq((3L, 30L)).toDF("id", "x"), src, batchId = Some(2L))
       await(2L)
     } finally q2.stop()
     val ids = Snapshots.read(spark, sink).select("id").as[Long].collect().toSeq
@@ -192,7 +192,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     val b = tmpBase()
     val (src, sink, mirror) = (s"$b/src", s"$b/sink", s"$b/mirror")
     Snapshots.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), src) // v0
-    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "v"), src, Seq.empty, Some(1L))
+    Snapshots.commitAppend(Seq((4L, "d")).toDF("id", "v"), src, batchId = Some(1L))
     Snapshots.commitDelete(Seq(2L).toDF("id"), src, "id", Some(2L))
     Snapshots.commitMerge(
       Seq((3L, "c2", "web"), (5L, "e", "web")).toDF("id", "v", "src"),
@@ -225,10 +225,10 @@ class ChangeFeedSpec extends AnyFunSuite {
     val (src, sink) = (s"$b/src", s"$b/sink")
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), src)                // v0
     (1 to 3).foreach(i => Snapshots.commitAppend(                        // v1-v3: insert run
-      Seq((10L + i, s"i$i")).toDF("id", "v"), src, Seq.empty, Some(i.toLong)))
+      Seq((10L + i, s"i$i")).toDF("id", "v"), src, batchId = Some(i.toLong)))
     Snapshots.commitDelete(Seq(11L).toDF("id"), src, "id", Some(4L))     // v4: splits runs
     (5 to 6).foreach(i => Snapshots.commitAppend(                        // v5-v6: insert run
-      Seq((20L + i, s"j$i")).toDF("id", "v"), src, Seq.empty, Some(i.toLong)))
+      Seq((20L + i, s"j$i")).toDF("id", "v"), src, batchId = Some(i.toLong)))
     ChangeFeed.catchUp(spark, src, sink)
     val (mA, mB) = (s"$b/mA", s"$b/mB")
     Seq(mA, mB).foreach(m =>
@@ -257,13 +257,13 @@ class ChangeFeedSpec extends AnyFunSuite {
     val (src, sink, mirror) = (s"$b/src", s"$b/sink", s"$b/mirror")
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), src)                // v0
     (1 to 3).foreach(i => Snapshots.commitAppend(
-      Seq((10L + i, s"i$i")).toDF("id", "v"), src, Seq.empty, Some(i.toLong)))
+      Seq((10L + i, s"i$i")).toDF("id", "v"), src, batchId = Some(i.toLong)))
     ChangeFeed.catchUp(spark, src, sink)                                 // feed v1-v3
     Snapshots.commitBatch(Snapshots.readVersion(spark, src, 0L), mirror, 0L)
     assert(ChangeFeed.mirrorCatchUp(spark, sink, mirror, "id") == Seq(1L, 2L, 3L))
     // the source moves on; the feed lands two more versions
     (4 to 5).foreach(i => Snapshots.commitAppend(
-      Seq((20L + i, s"j$i")).toDF("id", "v"), src, Seq.empty, Some(i.toLong)))
+      Seq((20L + i, s"j$i")).toDF("id", "v"), src, batchId = Some(i.toLong)))
     ChangeFeed.catchUp(spark, src, sink)                                 // feed v4-v5
     // sink version k landed feed version k+1; appended landings carry
     // a _commit_version sidecar whose min==max==that version, so the
@@ -283,6 +283,29 @@ class ChangeFeedSpec extends AnyFunSuite {
     val got = Snapshots.read(spark, mirror).as[(Long, String)].collect().toSet
     val want = Snapshots.read(spark, src).as[(Long, String)].collect().toSet
     assert(got == want)
+  }
+
+  test("Snapshots.maintain compacts a feed sink and keeps its _commit_version sidecar") {
+    import spark.implicits._
+    import graft.sources.FileStats.ColRange
+    val b = tmpBase()
+    val (src, sink) = (s"$b/src", s"$b/sink")
+    Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), src)                // v0
+    (1 to 3).foreach(i => Snapshots.commitAppend(
+      Seq((10L + i, s"i$i")).toDF("id", "v"), src, batchId = Some(i.toLong)))
+    ChangeFeed.catchUp(spark, src, sink)                                 // sink v0-v2
+    val m = Snapshots.maintain(spark, Seq(sink))
+    val cv = Snapshots.latestVersion(sink).get
+    assert(m.compacted(sink).contains(cv) && !Snapshots.isDelta(sink, cv))
+    assert(Snapshots.statsOf(sink, cv).nonEmpty,
+      "compaction stripped the sink's _commit_version sidecar")
+    // a watermark range still skips the applied landings' files
+    val wmRange = Seq(ColRange("_commit_version", lower = Some(3L)))
+    val (kept, total) = Snapshots.prunedFileCount(sink, cv, wmRange).get
+    assert(kept > 0 && kept < total, s"compacted sink pruned $kept of $total files")
+    val pruned = Snapshots.readPruned(spark, sink, wmRange)
+      .select(col("id"), col("_commit_version")).as[(Long, Long)].collect().toSet
+    assert(pruned == Set(13L -> 3L))
   }
 
   test("absorbSemantic fails LOUDLY on a non-empty batch before the index is built") {

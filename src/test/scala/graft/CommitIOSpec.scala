@@ -160,7 +160,7 @@ class CommitIOSpec extends AnyFunSuite {
         val start = new CountDownLatch(1)
         val fs = (0 until 4).map(_ => pool2.submit(new java.util.concurrent.Callable[Long] {
           def call(): Long = { start.await()
-            Snapshots.commitAppend(Seq(42L).toDF("id"), root, Seq.empty, Some(99L)) }
+            Snapshots.commitAppend(Seq(42L).toDF("id"), root, batchId = Some(99L)) }
         }))
         start.countDown(); fs.foreach(_.get())
       } finally pool2.shutdown()

@@ -27,7 +27,7 @@ class FeedTickCostSpec extends AnyFunSuite {
     val (src, sink) = (s"$b/src", s"$b/sink")
     Snapshots.commit(Seq((0L, "r0")).toDF("id", "v"), src)
     (1 to n).foreach(i => Snapshots.commitAppend(
-      Seq((i.toLong, s"r$i")).toDF("id", "v"), src, Seq.empty, Some(i.toLong)))
+      Seq((i.toLong, s"r$i")).toDF("id", "v"), src, batchId = Some(i.toLong)))
     ChangeFeed.catchUp(spark, src, sink)
     assert(ChangeFeed.position(sink).contains(n.toLong))
     def measure(body: => Unit): Long = {
@@ -40,9 +40,9 @@ class FeedTickCostSpec extends AnyFunSuite {
     }
     val twoPending = measure {
       Snapshots.commitAppend(Seq((n + 1L, "x")).toDF("id", "v"), src,
-        Seq.empty, Some(n + 1L))
+        batchId = Some(n + 1L))
       Snapshots.commitAppend(Seq((n + 2L, "y")).toDF("id", "v"), src,
-        Seq.empty, Some(n + 2L))
+        batchId = Some(n + 2L))
       assert(ChangeFeed.catchUp(spark, src, sink).size == 2)
     }
     (idle, twoPending)
@@ -69,7 +69,7 @@ class FeedTickCostSpec extends AnyFunSuite {
     val root = s"$b/t"
     Snapshots.commit(Seq(1L).toDF("id"), root)
     (1 to 20).foreach(i => Snapshots.commitAppend(
-      Seq(i.toLong).toDF("id"), root, Seq.empty, Some(i.toLong)))
+      Seq(i.toLong).toDF("id"), root, batchId = Some(i.toLong)))
     val c0 = Snapshots.manifestReads.get()
     assert(Snapshots.versionsAbove(root, 18L) == Seq(19L, 20L))
     assert(Snapshots.manifestReads.get() == c0,
@@ -81,7 +81,7 @@ class FeedTickCostSpec extends AnyFunSuite {
     val b = java.nio.file.Files.createTempDirectory("chof").toString
     val root = s"$b/t"
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), root)
-    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), root, Seq.empty, Some(1L))
+    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), root, batchId = Some(1L))
     Snapshots.commitDelete(Seq(1L).toDF("id"), root, "id", Some(2L))
     for (v <- Seq(1L, 2L)) {
       val a = Snapshots.changesOf(spark, root, v).collect().toSet

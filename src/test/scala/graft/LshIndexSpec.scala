@@ -128,8 +128,8 @@ class LshIndexSpec extends AnyFunSuite {
     val b1 = plantedBatch(5000000L).localCheckpoint()
     val r1 = LshIndex.absorbBatch(spark, root, b1, batchId = 0L).collect().toSet
     // compact BOTH artifact chains back to single full snapshots
-    Snapshots.compact(spark, LshIndex.bandsRoot(root), Seq("bmod"))
-    Snapshots.compact(spark, LshIndex.shinglesRoot(root), Seq("dmod"))
+    Snapshots.compact(spark, LshIndex.bandsRoot(root))
+    Snapshots.compact(spark, LshIndex.shinglesRoot(root))
     assert(!Snapshots.isDelta(LshIndex.bandsRoot(root),
       Snapshots.latestVersion(LshIndex.bandsRoot(root)).get))
     // watermark carry: a re-delivered day-1 batch must still no-op
@@ -264,8 +264,8 @@ class LshIndexSpec extends AnyFunSuite {
     assert(preDelete.join(delIds, Seq("doc_id")).count() > 0,
       "audit view lost the pre-delete rows")
     // physical forget: compact + vacuum leave no parquet holding the ids
-    Snapshots.compact(spark, LshIndex.bandsRoot(root), Seq("bmod"))
-    Snapshots.compact(spark, LshIndex.shinglesRoot(root), Seq("dmod"))
+    Snapshots.compact(spark, LshIndex.bandsRoot(root))
+    Snapshots.compact(spark, LshIndex.shinglesRoot(root))
     Snapshots.vacuum(LshIndex.bandsRoot(root), keep = 0)
     Snapshots.vacuum(LshIndex.shinglesRoot(root), keep = 0)
     Seq(LshIndex.bandsRoot(root), LshIndex.shinglesRoot(root)).foreach { r =>

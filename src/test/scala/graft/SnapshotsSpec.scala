@@ -144,10 +144,10 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commitPartitioned(
       Seq((1L, 0), (2L, 1)).toDF("id", "bucket"), root, Seq("bucket"))
     val v1 = Snapshots.commitAppend(
-      Seq((3L, 0), (4L, 2)).toDF("id", "bucket"), root, Seq("bucket"), Some(7L))
+      Seq((3L, 0), (4L, 2)).toDF("id", "bucket"), root, batchId = Some(7L))
     // idempotent replay of the same batch id
     assert(Snapshots.commitAppend(
-      Seq((3L, 0), (4L, 2)).toDF("id", "bucket"), root, Seq("bucket"), Some(7L)) == v1)
+      Seq((3L, 0), (4L, 2)).toDF("id", "bucket"), root, batchId = Some(7L)) == v1)
     assert(Snapshots.read(spark, root).count() == 4)
     // partition pruning survives the chain union: both branch scans
     // carry a PartitionFilters entry on bucket
@@ -202,27 +202,27 @@ class SnapshotsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpRoot()
     Snapshots.commit((1L to 3L).toDF("id"), root)                          // v0
-    Snapshots.commitAppend(Seq(4L).toDF("id"), root, Seq.empty, Some(5L))  // v1, id 5
+    Snapshots.commitAppend(Seq(4L).toDF("id"), root, batchId = Some(5L))  // v1, id 5
     // an interleaved UNKEYED commit leaves the latest manifest with no
     // batchId of its own — the guard must still remember id 5
     Snapshots.commit((1L to 4L).toDF("id"), root)                          // v2
     val before = Snapshots.versions(root)
     assert(Snapshots.commitAppend(Seq(99L).toDF("id"), root,
-      Seq.empty, Some(5L)) == 2L, "re-delivered batch slipped past the guard")
+      batchId = Some(5L)) == 2L, "re-delivered batch slipped past the guard")
     assert(Snapshots.versions(root) == before &&
       Snapshots.read(spark, root).count() == 4)
     // same contract for commitBatch
     assert(Snapshots.commitBatch(Seq(99L).toDF("id"), root, batchId = 5L) == 2L)
     // a genuinely NEW batch id still advances
     assert(Snapshots.commitAppend(Seq(5L).toDF("id"), root,
-      Seq.empty, Some(6L)) == 3L)
+      batchId = Some(6L)) == 3L)
     assert(Snapshots.read(spark, root).count() == 5)
     // keyed fingerprints must NOT feed the monotone guard: a huge
     // content-fingerprint key on the same root cannot block later
     // small batch ids
     Snapshots.commitKeyed(Seq(7L).toDF("id"), root, key = Long.MaxValue - 1)
     assert(Snapshots.commitAppend(Seq(8L).toDF("id"), root,
-      Seq.empty, Some(7L)) == 5L, "a keyed fingerprint blocked a live batch")
+      batchId = Some(7L)) == 5L, "a keyed fingerprint blocked a live batch")
   }
 
   test("keyed-FIRST root: a fingerprint commit never becomes the watermark") {
@@ -239,12 +239,12 @@ class SnapshotsSpec extends AnyFunSuite {
       "keyed fingerprint leaked into the monotone watermark")
     // a later real batch (small id) must commit, not silently no-op
     assert(Snapshots.commitAppend(Seq(5L).toDF("id"), root,
-      Seq.empty, Some(0L)) == 1L, "append after keyed-first root was dropped")
+      batchId = Some(0L)) == 1L, "append after keyed-first root was dropped")
     assert(Snapshots.read(spark, root).count() == 5)
     assert(Snapshots.commitBatch(Seq(9L).toDF("id"), root, batchId = 1L) == 2L)
     // compact on a history CONTAINING the keyed commit must carry
     // only the monotone ids, not the fingerprint
-    Snapshots.commitAppend(Seq(6L).toDF("id"), root, Seq.empty, Some(2L))
+    Snapshots.commitAppend(Seq(6L).toDF("id"), root, batchId = Some(2L))
     val vC = Snapshots.compact(spark, root)
     assert(Snapshots.maxBatchIdOf(root, vC).contains(2L),
       s"compact watermark poisoned: ${Snapshots.maxBatchIdOf(root, vC)}")
@@ -269,7 +269,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.maxBatchIdOf(root, v0).isEmpty,
       "pre-marker keyed fingerprint poisoned the legacy watermark")
     assert(Snapshots.commitAppend(Seq(5L).toDF("id"), root,
-      Seq.empty, Some(0L)) == 1L,
+      batchId = Some(0L)) == 1L,
       "append after LEGACY keyed-first root was dropped")
     assert(Snapshots.read(spark, root).count() == 5)
   }
@@ -299,7 +299,7 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commit(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), root)          // v0
     Snapshots.commitAppend(
-      Seq((4L, "d")).toDF("id", "v"), root, Seq.empty, Some(0L))           // v1
+      Seq((4L, "d")).toDF("id", "v"), root, batchId = Some(0L))           // v1
     // delete one key from the BASE snapshot and one from the DELTA
     val vDel = Snapshots.commitDelete(
       Seq(2L, 4L).toDF("id"), root, "id", Some(1L))                        // v2
@@ -312,7 +312,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.readVersion(spark, root, 1L).count() == 4)
     // version-ordered fold: an append AFTER the tombstone re-adds
     Snapshots.commitAppend(
-      Seq((2L, "b2")).toDF("id", "v"), root, Seq.empty, Some(2L))          // v3
+      Seq((2L, "b2")).toDF("id", "v"), root, batchId = Some(2L))          // v3
     val after = Snapshots.read(spark, root)
       .as[(Long, String)].collect().toMap
     assert(after == Map(1L -> "a", 3L -> "c", 2L -> "b2"),
@@ -331,15 +331,15 @@ class SnapshotsSpec extends AnyFunSuite {
       .filter(col("id") === 4L).count() == 0, "deleted bytes survived compact")
     // the watermark carried through: a replayed pre-compact append no-ops
     assert(Snapshots.commitAppend(Seq((9L, "x")).toDF("id", "v"), root,
-      Seq.empty, Some(2L)) == vc, "replayed append re-applied after forget")
+      batchId = Some(2L)) == vc, "replayed append re-applied after forget")
   }
 
   test("compact carries the chain's max batchId: replayed appends still no-op") {
     import spark.implicits._
     val root = tmpRoot()
     Snapshots.commit((1L to 5L).toDF("id"), root)                        // v0 full
-    Snapshots.commitAppend(Seq(6L).toDF("id"), root, Seq.empty, Some(0L)) // id 0
-    Snapshots.commitAppend(Seq(7L).toDF("id"), root, Seq.empty, Some(1L)) // id 1
+    Snapshots.commitAppend(Seq(6L).toDF("id"), root, batchId = Some(0L)) // id 0
+    Snapshots.commitAppend(Seq(7L).toDF("id"), root, batchId = Some(1L)) // id 1
     val v3 = Snapshots.compact(spark, root)
     // the compacted manifest must remember id 1 — otherwise a
     // re-delivered batch would append on top of data that already
@@ -347,7 +347,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.manifestOf(root, v3).flatMap(_.batchId).contains(1L),
       "compact dropped the chain's max batchId")
     assert(Snapshots.commitAppend(Seq(7L).toDF("id"), root,
-      Seq.empty, Some(1L)) == v3, "replayed batch re-appended after compact")
+      batchId = Some(1L)) == v3, "replayed batch re-appended after compact")
     assert(Snapshots.read(spark, root).count() == 7)
   }
 
@@ -360,13 +360,13 @@ class SnapshotsSpec extends AnyFunSuite {
     // carry it via the manifest's maxBatchId FIELD (which excludes
     // keyed commits at write time), not the bounded legacy chain scan
     val epochMs = 1771234567890L
-    Snapshots.commitAppend(Seq(2L).toDF("id"), root, Seq.empty, Some(epochMs))
+    Snapshots.commitAppend(Seq(2L).toDF("id"), root, batchId = Some(epochMs))
     val vc = Snapshots.compact(spark, root)
     assert(Snapshots.maxBatchIdOf(root, vc).contains(epochMs),
       s"compact dropped the epoch-millis watermark: ${Snapshots.maxBatchIdOf(root, vc)}")
     // the re-delivered batch still no-ops — pre-fix it double-appended
     assert(Snapshots.commitAppend(Seq(2L).toDF("id"), root,
-      Seq.empty, Some(epochMs)) == vc,
+      batchId = Some(epochMs)) == vc,
       "re-delivered epoch-millis batch re-appended after compact")
     assert(Snapshots.read(spark, root).count() == 2)
   }
@@ -422,7 +422,7 @@ class SnapshotsSpec extends AnyFunSuite {
     // shape): the fast-path check passes for all of them simultaneously,
     // so only the under-lock guard stands between this and a 6x append
     inParallel(6)(_ =>
-      Snapshots.commitAppend(Seq(42L).toDF("id"), root, Seq.empty, Some(1L)))
+      Snapshots.commitAppend(Seq(42L).toDF("id"), root, batchId = Some(1L)))
     assert(Snapshots.versions(root) == Seq(0L, 1L),
       s"racing same-batch deliveries multi-committed: ${Snapshots.versions(root)}")
     assert(Snapshots.read(spark, root).count() == 2,
@@ -491,15 +491,15 @@ class SnapshotsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpRoot()
     Snapshots.commit(Seq(0L).toDF("id"), root)                             // v0
-    Snapshots.commitAppend(Seq(1L).toDF("id"), root, Seq.empty, Some(1L))  // v1
-    Snapshots.commitAppend(Seq(2L).toDF("id"), root, Seq.empty, Some(2L))  // v2
-    Snapshots.commitAppend(Seq(3L).toDF("id"), root, Seq.empty, Some(3L))  // v3
+    Snapshots.commitAppend(Seq(1L).toDF("id"), root, batchId = Some(1L))  // v1
+    Snapshots.commitAppend(Seq(2L).toDF("id"), root, batchId = Some(2L))  // v2
+    Snapshots.commitAppend(Seq(3L).toDF("id"), root, batchId = Some(3L))  // v3
     Snapshots.rollback(root, 1)
     // dead timeline still auditable BEFORE the repair commit
     assert(Snapshots.readVersion(spark, root, 3).count() == 4)
     // the repair rewrites v2 — old v3 (parent 2) would now fold over
     // DIFFERENT v2 data: it must be truncated, not served
-    Snapshots.commitAppend(Seq(22L).toDF("id"), root, Seq.empty, Some(2L))
+    Snapshots.commitAppend(Seq(22L).toDF("id"), root, batchId = Some(2L))
     assert(Snapshots.versions(root) == Seq(0L, 1L, 2L),
       s"dead-timeline manifests survived the recommit: ${Snapshots.versions(root)}")
     intercept[IllegalArgumentException](Snapshots.readVersion(spark, root, 3))
@@ -515,20 +515,20 @@ class SnapshotsSpec extends AnyFunSuite {
     val root = tmpRoot()
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), root)
     Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), root,
-      Seq.empty, Some(1L))
+      batchId = Some(1L))
     Snapshots.commitAppend(Seq((3L, "c", "web")).toDF("id", "v", "src"), root,
-      Seq.empty, Some(2L), evolveSchema = true)
+      batchId = Some(2L), evolveSchema = true)
     // an at-least-once runtime re-delivers batch 1 in its ORIGINAL
     // (pre-evolution) shape without the evolve flag: it is below the
     // watermark and must NO-OP — validation firing before the replay
     // fast-path crashed the pipeline here
     val vs = Snapshots.versions(root)
     Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), root,
-      Seq.empty, Some(1L))
+      batchId = Some(1L))
     assert(Snapshots.versions(root) == vs, "replayed old-shape batch committed")
     // same contract for a replayed old-shape merge
     Snapshots.commitMerge(Seq((2L, "B")).toDF("id", "v"), root, "id",
-      Seq.empty, Some(2L))
+      batchId = Some(2L))
     assert(Snapshots.versions(root) == vs, "replayed old-shape merge committed")
     assert(Snapshots.read(spark, root).count() == 3)
   }
@@ -541,7 +541,7 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commit(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), root)      // v0
     val vm = Snapshots.commitMerge(
-      Seq((2L, "b2"), (4L, "d")).toDF("id", "v"), root, "id", Seq.empty, Some(1L))
+      Seq((2L, "b2"), (4L, "d")).toDF("id", "v"), root, "id", batchId = Some(1L))
     assert(Snapshots.isDelta(root, vm) &&
       Snapshots.manifestOf(root, vm).flatMap(_.mergeKey).contains("id"))
     val after = Snapshots.read(spark, root).as[(Long, String)].collect().toMap
@@ -552,7 +552,7 @@ class SnapshotsSpec extends AnyFunSuite {
     // replay no-ops on the shared monotone watermark
     val vs = Snapshots.versions(root)
     assert(Snapshots.commitMerge(Seq((2L, "XX")).toDF("id", "v"),
-      root, "id", Seq.empty, Some(1L)) == vm)
+      root, "id", batchId = Some(1L)) == vm)
     assert(Snapshots.versions(root) == vs, "replayed merge re-committed")
     // version-ordered: a LATER delete removes a merged key
     Snapshots.commitDelete(Seq(4L).toDF("id"), root, "id", Some(2L))
@@ -562,7 +562,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.read(spark, root).as[(Long, String)].collect().toMap ==
       Map(1L -> "a", 2L -> "b2", 3L -> "c"))
     assert(Snapshots.commitMerge(Seq((2L, "YY")).toDF("id", "v"),
-      root, "id", Seq.empty, Some(2L)) == vc, "replayed merge re-applied after compact")
+      root, "id", batchId = Some(2L)) == vc, "replayed merge re-applied after compact")
     // schema contract: a type change is rejected like commitAppend's
     intercept[IllegalArgumentException](
       Snapshots.commitMerge(Seq((9L, 7L)).toDF("id", "v"), root, "id"))
@@ -629,20 +629,20 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), root)                 // v0
     // v1 in the original shape — validation caches (v1, ts, schema)
     Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), root,
-      Seq.empty, Some(1L))
+      batchId = Some(1L))
     // bad-batch repair: rollback and RECOMMIT v1 with an EVOLVED schema
     // (same version number, fresh manifest timestamp)
     Snapshots.rollback(root, 0)
     Snapshots.commitAppend(Seq((2L, "b", "web")).toDF("id", "v", "src"), root,
-      Seq.empty, Some(1L), evolveSchema = true)
+      batchId = Some(1L), evolveSchema = true)
     // the rewritten v1's schema must be what validation sees — a stale
     // cache entry from the first v1 would let the old shape through
     // unannounced (and mis-reject deltas carrying src)
     intercept[IllegalArgumentException](
       Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), root,
-        Seq.empty, Some(2L)))
+        batchId = Some(2L)))
     Snapshots.commitAppend(
-      Seq((3L, "c", "api")).toDF("id", "v", "src"), root, Seq.empty, Some(2L))
+      Seq((3L, "c", "api")).toDF("id", "v", "src"), root, batchId = Some(2L))
     assert(Snapshots.read(spark, root).count() == 3)
   }
 
@@ -652,22 +652,22 @@ class SnapshotsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpRoot()
     Snapshots.commit(Seq(0L).toDF("id"), root)                               // v0
-    val v1 = Snapshots.commitAppend(Seq(1L).toDF("id"), root, Seq.empty, Some(1L))
+    val v1 = Snapshots.commitAppend(Seq(1L).toDF("id"), root, batchId = Some(1L))
     // day 2 arrives poisoned and is committed before anyone notices
-    Snapshots.commitAppend(Seq(-99L).toDF("id"), root, Seq.empty, Some(2L))
+    Snapshots.commitAppend(Seq(-99L).toDF("id"), root, batchId = Some(2L))
     assert(Snapshots.read(spark, root).count() == 3)
     // the repair: roll the pointer back to the last good version —
     // the watermark is PER-VERSION, so it reverts with the pointer
     Snapshots.rollback(root, v1)
     assert(Snapshots.read(spark, root).as[Long].collect().toSet == Set(0L, 1L))
     // the corrected batch reuses the SAME batch id and must commit
-    val v2 = Snapshots.commitAppend(Seq(2L).toDF("id"), root, Seq.empty, Some(2L))
+    val v2 = Snapshots.commitAppend(Seq(2L).toDF("id"), root, batchId = Some(2L))
     assert(v2 == v1 + 1, "corrected batch did not land after rollback")
     // a re-delivered POISONED day 2 (same id) now no-ops
     assert(Snapshots.commitAppend(Seq(-99L).toDF("id"), root,
-      Seq.empty, Some(2L)) == v2, "poisoned replay slipped past the repaired watermark")
+      batchId = Some(2L)) == v2, "poisoned replay slipped past the repaired watermark")
     // and the clock continues
-    Snapshots.commitAppend(Seq(3L).toDF("id"), root, Seq.empty, Some(3L))
+    Snapshots.commitAppend(Seq(3L).toDF("id"), root, batchId = Some(3L))
     assert(Snapshots.read(spark, root).as[Long].collect().toSet ==
       Set(0L, 1L, 2L, 3L), "repaired history wrong")
   }
@@ -725,6 +725,37 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(pruned.as[(Long, String)].collect().toSet == want)
   }
 
+  test("a declared layout is inherited: append, merge, delete, compact and maintain keep dirs and sidecars") {
+    import spark.implicits._
+    import graft.sources.FileStats.ColRange
+    val root = tmpRoot()
+    def rows(ids: Range) = ids.map(i => (i.toLong, i % 3, s"v$i")).toDF("id", "k", "v")
+    Snapshots.commitPartitioned(rows(0 until 30), root, Seq("k"),
+      statsCols = Seq("id"))                                               // v0
+    Snapshots.commitAppend(rows(30 until 40), root, batchId = Some(1L))    // v1
+    Snapshots.commitMerge(Seq((5L, 2, "m5"), (50L, 2, "m50")).toDF("id", "k", "v"),
+      root, "id", batchId = Some(2L))                                      // v2
+    Snapshots.commitDelete(Seq(7L).toDF("id"), root, "id", Some(3L))       // v3
+    Snapshots.commitAppend(rows(60 until 66), root, batchId = Some(4L))    // v4
+    assert(Snapshots.compact(spark, root) == 5L)                           // v5
+    Snapshots.commitAppend(rows(70 until 73), root, batchId = Some(5L))    // v6
+    assert(Snapshots.maintain(spark, Seq(root), keep = 10)
+      .compacted(root).contains(7L))                                       // v7
+    val range = Seq(ColRange("id", lower = Some(4L), upper = Some(35L)))
+    for (v <- Snapshots.versions(root)) {
+      if (Snapshots.manifestOf(root, v).exists(_.tombstoneKey.isEmpty)) {
+        val dirs = Files.list(Paths.get(s"$root/data/v=$v")).iterator().asScala
+          .map(_.getFileName.toString).toSeq
+        assert(dirs.exists(_.startsWith("k=")), s"v$v has no k= dirs: $dirs")
+        assert(Snapshots.statsOf(root, v).exists(_.nonEmpty), s"v$v has no stats sidecar")
+      }
+      val pruned = Snapshots.readPruned(spark, root, range, Some(v)).collect().toSet
+      val filtered = Snapshots.readVersion(spark, root, v)
+        .filter(col("id").between(4L, 35L)).collect().toSet
+      assert(pruned == filtered, s"v$v: readPruned diverged from read + filter")
+    }
+  }
+
   test("manifest text per commit kind (ts and cid masked)") {
     import spark.implicits._
     val root = tmpRoot()
@@ -732,13 +763,14 @@ class SnapshotsSpec extends AnyFunSuite {
     Snapshots.commit(rows(1L, 2L), root)                                   // v0 plain
     Snapshots.commitBatch(rows(1L, 2L, 3L), root, batchId = 1L)            // v1 batch
     Snapshots.commitKeyed(rows(1L, 2L, 3L), root, key = 77L)               // v2 keyed
-    Snapshots.commitAppend(rows(4L), root, Seq.empty, Some(2L))            // v3 delta
+    Snapshots.commitAppend(rows(4L), root, batchId = Some(2L))             // v3 delta
     Snapshots.commitDelete(Seq(2L).toDF("id"), root, "id", Some(3L))       // v4 tombstone
     Snapshots.commitMerge(Seq((3L, "C")).toDF("id", "v"), root, "id")      // v5 merge
     assert(Snapshots.compact(spark, root) == 6L)                           // v6 compacted
-    def masked(v: Int) = Files.readString(Paths.get(s"$root/manifests/v$v.json"))
+    def maskedIn(r: String)(v: Int) = Files.readString(Paths.get(s"$r/manifests/v$v.json"))
       .replaceAll("\"ts\":\\d+", "\"ts\":0")
       .replaceAll("\"cid\":\"[^\"]*\"", "\"cid\":\"-\"")
+    def masked(v: Int) = maskedIn(root)(v)
     val head = (v: Int, n: Int) =>
       s"""{"version":$v,"rows":$n,"parent":${v - 1},"ts":0,"cid":"-""""
     assert((0 to 6).map(masked) == Seq(
@@ -749,5 +781,19 @@ class SnapshotsSpec extends AnyFunSuite {
       head(4, 1) + ""","batchId":3,"delta":true,"tombstoneKey":"id","maxBatchId":3}""",
       head(5, 1) + ""","delta":true,"mergeKey":"id","maxBatchId":3}""",
       head(6, 3) + ""","batchId":3,"compacted":true,"maxBatchId":3}"""))
+    // a partitioned, stats-declaring root: full commits write the
+    // layout after maxBatchId, every later commit carries it forward
+    val laid = tmpRoot()
+    def kRows(ids: Long*) = ids.map(i => (i, (i % 2).toInt)).toDF("id", "k")
+    Snapshots.commitPartitioned(kRows(1L, 2L), laid, Seq("k"), Seq("id"))   // v0
+    Snapshots.commitAppend(kRows(3L), laid, batchId = Some(1L))              // v1
+    Snapshots.commitDelete(Seq(2L).toDF("id"), laid, "id", Some(2L))         // v2
+    assert(Snapshots.compact(spark, laid) == 3L)                             // v3
+    val layout = ""","partitionCols":["k"],"statsCols":["id"]}"""
+    assert((0 to 3).map(maskedIn(laid)) == Seq(
+      head(0, 2) + layout,
+      head(1, 1) + ""","batchId":1,"delta":true,"maxBatchId":1""" + layout,
+      head(2, 1) + ""","batchId":2,"delta":true,"tombstoneKey":"id","maxBatchId":2""" + layout,
+      head(3, 2) + ""","batchId":2,"compacted":true,"maxBatchId":2""" + layout))
   }
 }

@@ -76,12 +76,12 @@ class StatsSkippingSpec extends AnyFunSuite {
       (lo until hi).map(i => (i, s"v$i")).toDF("id", "v")
         .repartitionByRange(4, col("id"))
     Snapshots.commit(part(0L, 4000L), root, statsCols = Seq("id"))        // v0
-    Snapshots.commitAppend(part(4000L, 6000L), root, batchId = Some(1L),
-      statsCols = Seq("id"))                                              // v1
+    Snapshots.commitAppend(part(4000L, 6000L), root,
+      batchId = Some(1L))                                                 // v1
     Snapshots.commitDelete(
       (0L until 6000L by 13).toDF("id"), root, "id", Some(2L))            // v2
     // merge: update ids 100-199 (values shifted), insert 7000-7099 —
-    // committed WITHOUT stats (members without a sidecar scan whole)
+    // written with the root's inherited `id` stats
     Snapshots.commitMerge(
       ((100L until 200L).map(i => (i, s"upd$i")) ++
         (7000L until 7100L).map(i => (i, s"new$i"))).toDF("id", "v"),
@@ -232,8 +232,8 @@ class StatsSkippingSpec extends AnyFunSuite {
       (lo until hi).map(i => (i, s"v$i")).toDF("id", "v")
         .repartitionByRange(4, col("id"))
     Snapshots.commit(part(0L, 4000L), root, statsCols = Seq("id"))        // v0
-    Snapshots.commitAppend(part(4000L, 6000L), root, batchId = Some(1L),
-      statsCols = Seq("id"))                                              // v1
+    Snapshots.commitAppend(part(4000L, 6000L), root,
+      batchId = Some(1L))                                                 // v1
     Snapshots.commitDelete(
       (0L until 6000L by 13).toDF("id"), root, "id", Some(2L))            // v2
     Snapshots.commitMerge(
@@ -368,14 +368,17 @@ class StatsSkippingSpec extends AnyFunSuite {
     val root = tmpRoot()
     Snapshots.commit(Seq((1L, "a")).toDF("id", "v"), root, statsCols = Seq("id"))
     Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), root,
-      batchId = Some(1L), statsCols = Seq("id"))
+      batchId = Some(1L))
     assert(Snapshots.statsOf(root, 0L).nonEmpty)
     assert(Snapshots.statsOf(root, 1L).nonEmpty)
-    // rollback + recommit truncates the dead v1 — its sidecar too
+    // rollback + recommit truncates the dead v1 — its sidecar too: the
+    // recommit inherits `id` stats, so v1's sidecar must describe the
+    // recommitted row (id 3), not the dead timeline's (id 2)
     Snapshots.rollback(root, 0L)
     Snapshots.commitAppend(Seq((3L, "c")).toDF("id", "v"), root,
-      batchId = Some(2L)) // no stats on the recommit
-    assert(Snapshots.statsOf(root, 1L).isEmpty,
+      batchId = Some(2L))
+    assert(Snapshots.statsOf(root, 1L).map(_.map(f =>
+        (f.stats("id").min, f.stats("id").max))).contains(Seq(("3", "3"))),
       "dead-timeline stats sidecar survived truncation")
     // compact + aggressive vacuum drops v0's sidecar with its version
     Snapshots.compact(spark, root)

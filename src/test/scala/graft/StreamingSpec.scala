@@ -848,6 +848,35 @@ class StreamingSpec extends AnyFunSuite {
       "streaming probe diverged from the batch stored-index probe")
   }
 
+  test("streaming near-dup probe bands like the root: a rowsPerBand = 4 index matches planted copies") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.dedup.LshIndex
+    val corpus = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")).localCheckpoint()
+    val root = java.nio.file.Files.createTempDirectory("graft-lshstream4").toString
+    LshIndex.build(corpus, root, rowsPerBand = 4)
+    // exact copies: identical signatures, so every band of the stored
+    // original collides — whatever the banding, as long as it matches
+    val originals = corpus.filter(pmod(col("doc_id"), lit(10)) === 0)
+      .filter(size(LshIndex.shingleSet(col("text"))) > 0).limit(20)
+      .as[(Long, String)].collect().toSeq
+    assert(originals.nonEmpty)
+    val mem = MemoryStream[(Long, String, Timestamp)]
+    mem.addData(originals.map { case (id, t) => (id + 1000000L, t, ts(1)) })
+    val q = graft.streaming.DocsStream
+      .probeNearDups(spark, mem.toDF().toDF("doc_id", "text", "ts"), root, "ts")
+      .writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("lshprobe4").start()
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.table("lshprobe4").select(col("new_id"), col("match_id"))
+      .as[(Long, Long)].collect().toSet
+    val planted = originals.map { case (id, _) => (id + 1000000L, id) }.toSet
+    assert(planted.subsetOf(got),
+      s"probe missed planted copies: ${planted.diff(got).take(5)}")
+  }
+
   test("streaming span probe: stateless flags equal the batch report (corpus ∪ self)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
