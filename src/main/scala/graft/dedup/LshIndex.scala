@@ -426,26 +426,9 @@ object LshIndex {
     // Crash between them is the same replay story in either order:
     // both are idempotent per batchId, the incomplete one lands on
     // retry while the complete one no-ops.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fb = pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long =
-          Snapshots.commitAppend(bb, bandsRoot(root), Some(batchId))
-      })
-      val fs = pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long =
-          Snapshots.commitAppend(sh, shinglesRoot(root), Some(batchId))
-      })
-      // wait for BOTH before rethrowing: shutdown() does not stop a
-      // running task, so throwing on the first failure would leave the
-      // other append committing after absorbBatch has already failed
-      val failures = Seq(fb, fs).flatMap { f =>
-        try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException =>
-          Some(e.getCause) }
-      }
-      failures.headOption.foreach(throw _)
-    } finally pool.shutdown()
+    Snapshots.inParallel(2, Seq(
+      () => Snapshots.commitAppend(bb, bandsRoot(root), Some(batchId)),
+      () => Snapshots.commitAppend(sh, shinglesRoot(root), Some(batchId))))
     out
   }
 }

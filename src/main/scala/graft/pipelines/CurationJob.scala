@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.BloomIndex
 import graft.functions.{TextAnalysis, TokenizerStore}
 import graft.operators.Curate
+import graft.plans.Bound
 import graft.sources.Snapshots
 
 /** The corpus-curation chain as an OPERATIONAL job: quality gate →
@@ -307,23 +308,21 @@ object CurationJob {
   /** RANGE/POINT LOOKUP on the curated corpus through the stats
     * sidecars: a plain filtered read on the doc_id interval — the
     * planner pushes the bounds to each chain member's scan and the
-    * stats-backed file index prunes its file list, so a
-    * single-document fetch on a 100 TB corpus touches one file of
-    * one delta (or a slice of the compacted base) instead of the
-    * whole chain. Exact regardless of which members carry stats
-    * (members without sidecars scan whole; Spark's row-level filter
-    * completes). */
+    * stats-backed file index ([[graft.sources.StatsFileIndex]]) prunes
+    * its file list, so a single-document fetch on a 100 TB corpus
+    * touches one file of one delta (or a slice of the compacted base)
+    * instead of the whole chain. Exact regardless of which members
+    * carry stats (members without sidecars scan whole; Spark's
+    * row-level filter completes).
+    *
+    * Cost per request: one Spark job, and no Janino compile once the
+    * chain's shape has been read. The bounds are
+    * [[graft.plans.Bound]]s, not literals, so a new id reuses the
+    * generated code of the last one. */
   def lookupDocs(spark: org.apache.spark.sql.SparkSession,
-      curatedRoot: String, loId: Long, hiId: Long): DataFrame = {
-    // a PLAIN filtered read: the per-member stats sidecars are
-    // consulted by the planner itself ([[graft.sources.StatsFileIndex]]
-    // — Catalyst pushes the BETWEEN to the scan, the index prunes the
-    // file list), so this needs no readPruned side door and any ad-hoc
-    // consumer filtering the same way skips identically
-    import org.apache.spark.sql.functions.col
+      curatedRoot: String, loId: Long, hiId: Long): DataFrame =
     Snapshots.read(spark, curatedRoot)
-      .filter(col("doc_id") >= loId && col("doc_id") <= hiId)
-  }
+      .filter(col("doc_id") >= Bound(loId) && col("doc_id") <= Bound(hiId))
 
   /** RIGHT-TO-BE-FORGOTTEN — targeted delete through the whole
     * ingest deployment: tombstone `docIds` out of the curated corpus

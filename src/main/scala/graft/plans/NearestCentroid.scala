@@ -49,25 +49,11 @@ case class NearestCentroid(child: Expression, cids: Array[Int],
     StructField("ccos", DoubleType, nullable = false)))
   override def nullIntolerant: Boolean = true
 
-  private def roundedCos(v: ArrayData, cv: Array[Double]): Double = {
-    val n = math.min(v.numElements(), cv.length)
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      val xi = v.getDouble(i); val yi = cv(i)
-      dot += xi * yi; nx += xi * xi; ny += yi * yi
-      i += 1
-    }
-    val raw = dot / (math.sqrt(nx) * math.sqrt(ny))
-    if (raw.isNaN || raw.isInfinite) raw
-    else java.math.BigDecimal.valueOf(raw)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-  }
-
   override protected def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+    val v = a.asInstanceOf[ArrayData].toDoubleArray()
     var bestCid = -1; var bestCos = Double.NegativeInfinity; var j = 0
     while (j < cents.length) {
-      val c = roundedCos(v, cents(j))
+      val c = NearestCentroid.cosine6(v, cents(j))
       if (bestCid < 0 || java.lang.Double.compare(c, bestCos) > 0) {
         bestCos = c; bestCid = cids(j)
       }
@@ -118,6 +104,31 @@ case class NearestCentroid(child: Expression, cids: Array[Int],
 }
 
 object NearestCentroid {
+  /** Cosine of `x` and `y` over min(|x|, |y|) elements, rounded as
+    * Spark's `round(_, 6)` rounds a double: the score every stored-IVF
+    * rule compares, bit-equal to `round(Embeddings.cosine(x, y), 6)`. */
+  private[graft] def cosine6(x: Array[Double], y: Array[Double]): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+    while (i < n) {
+      val xi = x(i); val yi = y(i)
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    val raw = dot / (math.sqrt(nx) * math.sqrt(ny))
+    if (raw.isNaN || raw.isInfinite) raw
+    else java.math.BigDecimal.valueOf(raw)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  /** The `n` centroids of `cl` nearest to `v`, best first: ordered by
+    * (rounded cosine desc, cid asc), the rule [[TopKAgg]] ranks by —
+    * the same centroid the expression picks when `n` is 1. */
+  private[graft] def nearest(v: Array[Double], cl: Array[(Int, Array[Double])],
+      n: Int): Seq[Int] =
+    cl.map { case (c, cv) => (cosine6(v, cv), c.toLong) }
+      .sortBy(t => (-t._1, t._2)).take(n).map(_._2.toInt).toSeq
+
   /** Column-API entry point: `cl` as (cid, centroid) pairs, any order
     * (sorted here — ascending cid is what makes first-strict-max break
     * ties to the lowest cid). */

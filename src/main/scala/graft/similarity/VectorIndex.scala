@@ -149,9 +149,12 @@ object VectorIndex {
     * STORED IN THE INDEX rows for filtered search (the FAISS/vector-DB
     * payload pattern: at 100 TB the metadata cannot be a separate
     * corpus-sized join at query time). */
-  def assignRowLocal(vectors: DataFrame, cents: DataFrame): DataFrame = {
-    val cl: Array[(Int, Array[Double])] = cents.select(col("cid"), col("cv"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+  def assignRowLocal(vectors: DataFrame, cents: DataFrame): DataFrame =
+    assignRowLocal(vectors, cents.select(col("cid"), col("cv"))
+      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)))
+
+  private[graft] def assignRowLocal(vectors: DataFrame,
+      cl: Array[(Int, Array[Double])]): DataFrame =
     // ONE native expression looping the centroid matrix
     // ([[graft.plans.NearestCentroid]] — round-to-6dp before the
     // argmax, ties to the lowest cid, bit-equal to the previous
@@ -164,7 +167,15 @@ object VectorIndex {
       .withColumn("bucket", col("__best.bucket"))
       .withColumn("ccos", col("__best.ccos"))
       .drop("__best")
-  }
+
+  /** The index's committed centroids as (cid, centroid) pairs, from
+    * the driver cache ([[Snapshots.collectLatest]]): KB-scale and
+    * immutable per commit, so only the first request after a build
+    * runs a Spark job for them. */
+  private[graft] def centroidMatrix(spark: SparkSession,
+      root: String): Array[(Int, Array[Double])] =
+    Snapshots.collectLatest(spark, centroidsRoot(root))
+      .map(r => (r.getAs[Int]("cid"), r.getAs[Seq[Double]]("cv").toArray))
 
   /** Train the coarse quantizer ([[Embeddings.lloyd]], seeds =
     * vec_id < seedK) and assign every corpus vector to its
@@ -199,9 +210,8 @@ object VectorIndex {
     * version. */
   def assignBatch(spark: SparkSession, root: String, batch: DataFrame,
       batchId: Long): Long = {
-    val cents = Snapshots.read(spark, centroidsRoot(root))
     Snapshots.commitAppend(
-      assignRowLocal(batch, cents).drop("ccos"),
+      assignRowLocal(batch, centroidMatrix(spark, root)).drop("ccos"),
       assignmentsRoot(root), Some(batchId))
   }
 
@@ -238,8 +248,8 @@ object VectorIndex {
     * end-to-end (retrainSwap at 4x corpus → k 8 → 32). */
   def semProbeBatch(spark: SparkSession, root: String, batch: DataFrame,
       tau: Double, batchId: Long): DataFrame = {
-    val cents = Snapshots.read(spark, centroidsRoot(root))
-    val assigned = assignRowLocal(batch, cents).drop("ccos").localCheckpoint()
+    val assigned = assignRowLocal(batch, centroidMatrix(spark, root))
+      .drop("ccos").localCheckpoint()
     val buckets = assigned.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq
     // EMPTY batch: nothing to probe or absorb — return an empty pair
@@ -277,10 +287,9 @@ object VectorIndex {
     * signal to retrain rather than keep appending. One row:
     * (n_batch, mean_ccos_batch, mean_ccos_build, drift). */
   def assignDrift(spark: SparkSession, root: String, batch: DataFrame): DataFrame = {
-    val cents = Snapshots.read(spark, centroidsRoot(root))
     val baseline = Snapshots.read(spark, statsRoot(root))
       .select(col("mean_ccos").as("mean_ccos_build"))
-    assignRowLocal(batch, cents)
+    assignRowLocal(batch, centroidMatrix(spark, root))
       .agg(count(lit(1)).as("n_batch"),
         round(avg(col("ccos")), 6).as("mean_ccos_batch"))
       .crossJoin(broadcast(baseline))
@@ -299,12 +308,29 @@ object VectorIndex {
     }
 
   /** Multi-probe IVF top-k over the STORED index. NO training
-    * aggregate appears in this plan: centroids load from their
-    * snapshot (KB-scale — collected to compute the probe set, like
-    * any broadcast-var build), and the assignments scan carries a
-    * `bucket IN (probes)` filter on the partition column, so whole
-    * non-probed directories are pruned and per-query I/O is
-    * probe-bucket-sized.
+    * aggregate appears here, and the work per request is the distance
+    * work and one scan:
+    *
+    *  - the centroids come from the driver cache
+    *    ([[Snapshots.collectLatest]]; a Spark job only on the first
+    *    request after a build), and each query's `nprobe` buckets are
+    *    picked on the driver by the [[graft.plans.NearestCentroid]]
+    *    rule: cosine rounded 6dp, then (−ccos, cid) order;
+    *  - the assignments scan carries a `bucket IN (probes)` filter on
+    *    the partition column, so non-probed directories are pruned and
+    *    per-query I/O is probe-bucket-sized;
+    *  - ONE pass over the probed rows scores each against the queries
+    *    that probed its bucket and keeps a top-k per query and
+    *    partition; the driver merges those (at most k rows per query
+    *    and partition) into the answer.
+    *
+    * Cost per request: one Spark job, plus one to collect `queries`
+    * unless it is a local frame; no Janino compile once the plan's
+    * shape has run, since query vectors and buckets never enter
+    * generated code. The result is a local frame, so reading it runs
+    * no further job. Ranks order by (cos desc, n_id asc); a query
+    * never ranks itself; a query whose probed buckets hold no
+    * candidate has no rows.
     *
     * `candFilter` restricts the CANDIDATE side before ranking (a
     * metadata predicate over the index rows' stored payload columns —
@@ -314,46 +340,41 @@ object VectorIndex {
     * assignments scan, so it pushes into the parquet read.
     *
     * @param queries (q_id, qv) query frame (small by contract)
+    * @return (q_id, rank, n_id, cos)
     */
   def ivfTopKStored(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nprobe: Int = 2, candFilter: Column = lit(true)): DataFrame = {
     import spark.implicits._
-    val cents = Snapshots.read(spark, centroidsRoot(root))
-    // probe set: |queries| × K scored rows — bounded scalar reduction
-    // (each query keeps nprobe buckets); the driver-side collect is
-    // what turns the probe list into a partition filter below
-    val probes: Array[(Long, List[Long])] = queries.crossJoin(broadcast(cents))
-      .select(col("q_id"),
-        round(Embeddings.cosine(col("qv"), col("cv")), 6).as("ccos"),
-        col("cid").cast("long").as("cid"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(graft.plans.TopKAgg(nprobe).toColumn)
-      .map { case (q, top) => (q, top.map(_._2)) }
-      .collect()
-    val qprobe = broadcast(
-      probes.toSeq.flatMap { case (q, bs) => bs.map(b => (q, b.toInt)) }
-        .toDF("q_id", "bucket")
-        .join(queries, Seq("q_id")))
-    val buckets = probes.flatMap(_._2).distinct.map(_.toInt)
-    val cand = Snapshots.read(spark, assignmentsRoot(root))
-      .filter(col("bucket").isin(buckets: _*))
-      .filter(candFilter)
+    val cl = centroidMatrix(spark, root)
+    val qs = queries.select(col("q_id"), col("qv"))
+      .as[(Long, Array[Double])].collect()
+    // bucket -> the queries that probe it
+    val probing: Map[Int, Array[(Long, Array[Double])]] = qs
+      .flatMap(q => graft.plans.NearestCentroid.nearest(q._2, cl, nprobe).map(_ -> q))
+      .groupBy(_._1).map { case (b, ps) => b -> ps.map(_._2) }
+    val top = graft.plans.TopKAgg(k)
     // a neighbor appears at most once per query (one home bucket), so
-    // the probed union needs no dedup; ranking via the bounded
-    // map-side TopKAgg — k rows per query reach the shuffle
-    cand.join(qprobe, Seq("bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"),
-        round(Embeddings.cosine(col("qv"), col("v")), 6).as("cos"),
-        col("vec_id").as("n_id"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(graft.plans.TopKAgg(k).toColumn)
-      .flatMap { case (q, top) =>
-        top.zipWithIndex.map { case ((cs, n), i) => (q, (i + 1).toLong, n, cs) }
+    // the probed union needs no dedup
+    val partial = if (probing.isEmpty) Array.empty[(Long, List[(Double, Long)])]
+      else Snapshots.read(spark, assignmentsRoot(root))
+        .filter(col("bucket").isin(probing.keys.toSeq: _*))
+        .filter(candFilter)
+        .select(col("vec_id"), col("v"), col("bucket"))
+        .as[(Long, Array[Double], Int)]
+        .mapPartitions { rows =>
+          val best = scala.collection.mutable.HashMap.empty[Long, List[(Double, Long)]]
+          rows.foreach { case (id, v, b) =>
+            probing(b).foreach { case (q, qv) =>
+              if (q != id) best(q) = top.reduce(best.getOrElse(q, top.zero),
+                (graft.plans.NearestCentroid.cosine6(qv, v), id))
+            }
+          }
+          best.iterator
+        }
+        .collect()
+    partial.groupMapReduce(_._1)(_._2)(top.merge).toSeq
+      .flatMap { case (q, best) =>
+        best.zipWithIndex.map { case ((cs, n), i) => (q, (i + 1).toLong, n, cs) }
       }
       .toDF("q_id", "rank", "n_id", "cos")
   }

@@ -951,6 +951,24 @@ object Snapshots {
       spark.read.option("basePath", dd).parquet(dd).schema
     })
 
+  /** The latest snapshot of a SMALL table (an index's centroids: K
+    * rows), collected to the driver once per commit and cached by
+    * (root, version, commit identity) like [[memberSchemaCache]]. A
+    * committed version is immutable, so a request that needs the rows
+    * on the driver pays no Spark job after the first; a rebuild commits
+    * a new version and a rollback-then-recommit a new identity, so
+    * either misses. [[vacuum]] evicts the versions it drops. */
+  private[graft] val collectedCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, String), Array[org.apache.spark.sql.Row]]()
+
+  private[graft] def collectLatest(spark: SparkSession, root: String): Array[org.apache.spark.sql.Row] = {
+    val v = latestVersion(root).getOrElse(
+      throw new IllegalStateException(s"no committed version under $root"))
+    val id = manifestOf(root, v).fold("absent")(_.identity)
+    collectedCache.computeIfAbsent((root, v, id),
+      _ => readVersion(spark, root, v).collect())
+  }
+
   /** Scan ONE version's own data dir. When the version committed a
     * stats sidecar, the scan goes through [[StatsFileIndex]]: the
     * PLANNER consults the sidecar's per-file min/max against whatever
@@ -1164,28 +1182,32 @@ object Snapshots {
         .map(_ => compact(spark, root))
       (did, vacuum(root, keep))
     }
-    val done: Seq[(String, (Option[Long], Seq[Long]))] =
-      if (roots.size <= 1)
-        roots.map(r => r -> maintainOne(r))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(3, roots.size))
-        try {
-          val futs = roots.map { r =>
-            r -> pool.submit(new java.util.concurrent.Callable[(Option[Long], Seq[Long])] {
-              def call(): (Option[Long], Seq[Long]) = maintainOne(r)
-            })
-          }
-          futs.map { case (r, f) =>
-            r -> (try f.get()
-            catch { case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause })
-          }
-        } finally pool.shutdown()
-      }
+    val done = roots.zip(inParallel(3, roots.map(r => () => maintainOne(r))))
     Maintenance(done.map { case (r, (c, _)) => r -> c }.toMap,
       done.map { case (r, (_, v)) => r -> v }.toMap)
   }
+
+  /** Run `tasks` on a pool of `width` threads and return their results
+    * in order. Waits for EVERY task before it rethrows the first
+    * failure: a pool's shutdown does not stop a running task, so
+    * throwing early would leave the others committing after the caller
+    * has failed. A single task runs on the calling thread. */
+  private[graft] def inParallel[T](width: Int, tasks: Seq[() => T]): Seq[T] =
+    if (tasks.size <= 1) tasks.map(_())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(width, tasks.size))
+      try {
+        val futs = tasks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = t()
+        }))
+        val outs = futs.map(f =>
+          try Right(f.get())
+          catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
+        outs.collectFirst { case Left(e) => throw e }
+        outs.collect { case Right(x) => x }
+      } finally pool.shutdown()
+    }
 
   /** Retention: drop all snapshots older than `keep` versions behind
     * latest (never the pointer target), manifest first so a crashed
@@ -1274,6 +1296,7 @@ object Snapshots {
     drop.foreach(dropVersion(root, _))
     val dropped = drop.toSet
     memberSchemaCache.keySet.removeIf(k => k._1 == root && dropped(k._2))
+    collectedCache.keySet.removeIf(k => k._1 == root && dropped(k._2))
     drop
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.plans.Bound
 import graft.sources.FileStats.{ColRange, FileStat}
 
 /** PLANNER-INTEGRATED data skipping for [[Snapshots]] tables — the
@@ -122,7 +123,8 @@ object StatsFileIndex {
   /** Conservative translation of pushed-down Catalyst data filters
     * into sidecar range predicates: conjuncts over
     * `attr {=, <, <=, >, >=} literal` (either operand order) and
-    * IN-lists become inclusive [[ColRange]] bounds; anything else —
+    * IN-lists become inclusive [[ColRange]] bounds (a
+    * [[graft.plans.Bound]] counts as a literal); anything else —
     * casts, functions, OR trees, null checks — constrains NOTHING
     * (the file is kept), so an untranslatable predicate can only cost
     * performance, never rows. Strict bounds are widened to inclusive:
@@ -140,32 +142,40 @@ object StatsFileIndex {
       case u: UTF8String  => Some(u.toString)
       case _              => None // decimal/interval/binary: no sidecar type
     }
+    // a Bound is a literal that generated code reads by reference
+    object Const {
+      def unapply(e: Expression): Option[Any] = e match {
+        case Literal(v, _) => Some(v)
+        case Bound(v, _) => Some(v)
+        case _ => None
+      }
+    }
     def one(e: Expression): Seq[ColRange] = e match {
       case And(l, r) => one(l) ++ one(r)
-      case EqualTo(a: Attribute, Literal(v, _)) =>
+      case EqualTo(a: Attribute, Const(v)) =>
         conv(v).map(x => ColRange(a.name, Some(x), Some(x))).toSeq
-      case EqualTo(Literal(v, _), a: Attribute) =>
+      case EqualTo(Const(v), a: Attribute) =>
         conv(v).map(x => ColRange(a.name, Some(x), Some(x))).toSeq
-      case EqualNullSafe(a: Attribute, Literal(v, _)) if v != null =>
+      case EqualNullSafe(a: Attribute, Const(v)) if v != null =>
         conv(v).map(x => ColRange(a.name, Some(x), Some(x))).toSeq
-      case EqualNullSafe(Literal(v, _), a: Attribute) if v != null =>
+      case EqualNullSafe(Const(v), a: Attribute) if v != null =>
         conv(v).map(x => ColRange(a.name, Some(x), Some(x))).toSeq
-      case GreaterThan(a: Attribute, Literal(v, _)) =>
+      case GreaterThan(a: Attribute, Const(v)) =>
         conv(v).map(x => ColRange(a.name, lower = Some(x))).toSeq
-      case GreaterThanOrEqual(a: Attribute, Literal(v, _)) =>
+      case GreaterThanOrEqual(a: Attribute, Const(v)) =>
         conv(v).map(x => ColRange(a.name, lower = Some(x))).toSeq
-      case LessThan(a: Attribute, Literal(v, _)) =>
+      case LessThan(a: Attribute, Const(v)) =>
         conv(v).map(x => ColRange(a.name, upper = Some(x))).toSeq
-      case LessThanOrEqual(a: Attribute, Literal(v, _)) =>
+      case LessThanOrEqual(a: Attribute, Const(v)) =>
         conv(v).map(x => ColRange(a.name, upper = Some(x))).toSeq
       // literal-first comparisons flip the bound side
-      case GreaterThan(Literal(v, _), a: Attribute) =>
+      case GreaterThan(Const(v), a: Attribute) =>
         conv(v).map(x => ColRange(a.name, upper = Some(x))).toSeq
-      case GreaterThanOrEqual(Literal(v, _), a: Attribute) =>
+      case GreaterThanOrEqual(Const(v), a: Attribute) =>
         conv(v).map(x => ColRange(a.name, upper = Some(x))).toSeq
-      case LessThan(Literal(v, _), a: Attribute) =>
+      case LessThan(Const(v), a: Attribute) =>
         conv(v).map(x => ColRange(a.name, lower = Some(x))).toSeq
-      case LessThanOrEqual(Literal(v, _), a: Attribute) =>
+      case LessThanOrEqual(Const(v), a: Attribute) =>
         conv(v).map(x => ColRange(a.name, lower = Some(x))).toSeq
       // IN-list: the [min, max] envelope of the values — coarser than
       // the set but file-granular pruning can only use an envelope
@@ -173,8 +183,8 @@ object StatsFileIndex {
       // voids the whole envelope (a partial envelope could exclude
       // files holding the missed value).
       case In(a: Attribute, vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Literal]) =>
-        envelope(a.name, vs.map(_.asInstanceOf[Literal].value).flatMap(conv(_)),
+          vs.forall(Const.unapply(_).nonEmpty) =>
+        envelope(a.name, vs.flatMap(Const.unapply).flatMap(conv(_)),
           vs.size)
       case InSet(a: Attribute, vs) if vs.nonEmpty =>
         envelope(a.name, vs.toSeq.flatMap(conv(_)), vs.size)

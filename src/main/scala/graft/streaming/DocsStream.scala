@@ -295,13 +295,12 @@ object DocsStream {
   def probeSemantic(spark: org.apache.spark.sql.SparkSession,
       vectors: DataFrame, root: String, tau: Double): DataFrame = {
     import graft.similarity.{Embeddings, VectorIndex}
-    val cents = graft.sources.Snapshots
-      .read(spark, VectorIndex.centroidsRoot(root))
     val stored = graft.sources.Snapshots
       .read(spark, VectorIndex.assignmentsRoot(root))
       .select(col("vec_id").as("match_id"), col("v").as("mv"),
         col("bucket").cast("int").as("bucket"))
-    VectorIndex.assignRowLocal(vectors, cents).drop("ccos")
+    VectorIndex.assignRowLocal(vectors, VectorIndex.centroidMatrix(spark, root))
+      .drop("ccos")
       .join(stored, Seq("bucket"))
       .filter(col("vec_id") =!= col("match_id"))
       .select(col("vec_id").as("new_id"), col("match_id"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,6 @@ import graft.pipelines.DailyPipeline
   * in the same order each run, never hits. */
 class CodegenReuseSpec extends AnyFunSuite {
   import TestSpark._
-
-  /** Janino compilations (cache misses) while `body` runs. */
-  private def compiles(body: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
 
   /** Empties the JVM-wide codegen cache: earlier suites in this JVM may
     * have compiled these plans already, and the first run's count must
@@ -36,8 +28,8 @@ class CodegenReuseSpec extends AnyFunSuite {
   test("a second daily DAG run reuses the first run's generated code") {
     def runDag(): Unit = DailyPipeline.run(spark, sf).named.foreach(_._2.collect())
     clearCodegenCache()
-    val first = compiles(runDag())
-    val second = compiles(runDag())
+    val first = OpCost.of(runDag())._2.compiles
+    val second = OpCost.of(runDag())._2.compiles
     info(s"first run compiled $first classes, second $second")
     assert(second * 4 < first, s"first run compiled $first classes, second $second")
   }

@@ -500,4 +500,42 @@ class CommitIOSpec extends AnyFunSuite {
     assert(Snapshots.latestVersion(shRoot) == settled,
       "the shingles append committed after absorbBatch had thrown")
   }
+
+  test("maintain: a failed compact leaves no other root compacting or vacuuming after the throw") {
+    import spark.implicits._
+    val roots @ Seq(failing, slow, other) = Seq.fill(3)(tmpRoot())
+    roots.foreach { r =>
+      Snapshots.commit(Seq(1L).toDF("id"), r)
+      Snapshots.commitAppend(Seq(2L).toDF("id"), r)
+    }
+    val slowMoving = new CountDownLatch(1)
+    // the failing root's compaction throws only once the slow root's is
+    // under way, and the slow one outlives that failure
+    val io = new DelegatingIO {
+      override def moveStage(stage: Path, dst: Path): Unit =
+        if (dst.startsWith(Paths.get(failing))) {
+          slowMoving.await(60, TimeUnit.SECONDS)
+          throw new java.io.IOException("injected: compaction move failed")
+        } else {
+          if (dst.startsWith(Paths.get(slow))) {
+            slowMoving.countDown()
+            Thread.sleep(1000)
+          }
+          super.moveStage(stage, dst)
+        }
+    }
+    val e = intercept[java.io.IOException](withIO(io) {
+      Snapshots.maintain(spark, roots, keep = 0)
+    })
+    assert(e.getMessage.contains("injected"))
+    def state = roots.map(r => (Snapshots.latestVersion(r), Snapshots.versions(r)))
+    val settled = state
+    Thread.sleep(2000)
+    assert(state == settled, "a root changed after maintain had thrown")
+    // the roots that did not fail were maintained in full before the throw
+    Seq(slow, other).foreach { r =>
+      assert(!Snapshots.isDelta(r, Snapshots.latestVersion(r).get), s"$r not compacted")
+      assert(Snapshots.versions(r) == Seq(Snapshots.latestVersion(r).get), s"$r not vacuumed")
+    }
+  }
 }

@@ -40,9 +40,23 @@ class VectorIndexSpec extends AnyFunSuite {
       Snapshots.versions(VectorIndex.assignmentsRoot(root)) == av0,
       "querying the stored index committed a new version (retrained)")
     // plan shape: candidates scan is the index's partitioned snapshot,
-    // pruned to the probed buckets; the corpus parquet never appears
-    val p = VectorIndex.ivfTopKStored(spark, root, queries, k = 3)
-      .queryExecution.executedPlan.toString
+    // pruned to the probed buckets; the corpus parquet never appears.
+    // The answer comes back as a local frame, so the plans to inspect
+    // are the ones the request executed.
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = executed.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      VectorIndex.ivfTopKStored(spark, root, queries, k = 3)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val p = executed.asScala.mkString("\n")
     assert(p.contains("PartitionFilters") && p.contains("bucket"),
       s"assignments scan is not partition-pruned on bucket:\n$p")
     assert(!p.contains("embeddings.parquet"),
